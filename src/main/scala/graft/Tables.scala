@@ -1,10 +1,10 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+
+import graft.queries.SessionCache
 
 /** Testdata table loaders (TESTDATA.md / FIXTURES.md). */
 object Tables {
@@ -51,43 +51,27 @@ object Tables {
   }
 
   /** Parquet read shape of `events.ts` under `sfDir` (footer-only, cached
-    * per directory CONTENT — the streaming source needs it to declare its
-    * schema before any data flows). */
+    * per session and directory CONTENT — the streaming source needs it to
+    * declare its schema before any data flows). The testdata driver
+    * regenerates the directory in place between rounds, so a path-only
+    * key could serve a stale DataType and silently mis-scale the decode. */
   def eventsTsReadType(spark: SparkSession, sfDir: String): DataType =
-    tsShapes.computeIfAbsent(eventsKey(sfDir),
-      _ => readEventsRaw(spark, sfDir).schema("ts").dataType)
+    SessionCache.get("events_ts_type", spark, sfDir, EventsTable) {
+      readEventsRaw(spark, sfDir).schema("ts").dataType
+    }
 
-  /** Cache key for the per-directory ts shape/sanity verdicts: path plus
-    * the (name, length, mtime) signature of every file under
-    * `events.parquet`. The testdata driver regenerates the directory
-    * in-place between rounds, so a path-only key could serve a stale
-    * DataType from the previous generation and silently mis-scale the
-    * decode — regeneration changes the signature, which invalidates the
-    * entry without requiring a fresh JVM. */
-  private def eventsKey(sfDir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).toSeq
-          .sortBy(_.getName).flatMap(walk)
-      else Seq(f)
-    val sig = walk(new java.io.File(s"$sfDir/events.parquet"))
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString(";")
-    s"$sfDir|${sig.hashCode}"
-  }
-
-  private val tsShapes = new ConcurrentHashMap[String, DataType]()
-  private val tsChecked = ConcurrentHashMap.newKeySet[String]()
+  private val EventsTable = Seq("events.parquet")
 
   /** Loud guard against the silent-corruption failure mode: if a future
     * testdata generation changes the time unit again and the decode above
     * mis-scales it, timestamps collapse (30 days → 43 min) or explode
     * (epoch 56xxx), and every windowed result is wrong-but-plausible.
-    * One tiny driver-side job per (session, sfDir) asserts the decoded
-    * range lands in a sane window; a unit error of 1000× in either
-    * direction lands centuries away and fails with a message instead. */
-  def assertSaneEventTs(spark: SparkSession, sfDir: String): Unit = {
-    val key = eventsKey(sfDir)
-    if (!tsChecked.contains(key)) {
+    * One tiny driver-side job per (session, directory content) asserts
+    * the decoded range lands in a sane window; a unit error of 1000× in
+    * either direction lands centuries away and fails with a message
+    * instead. */
+  def assertSaneEventTs(spark: SparkSession, sfDir: String): Unit =
+    SessionCache.get("events_ts_range", spark, sfDir, EventsTable) {
       val r = normalizeTs(spark, sfDir)
         .agg(min(unix_micros(col("ts"))).as("lo"), max(unix_micros(col("ts"))).as("hi"))
         .head()
@@ -97,9 +81,7 @@ object Tables {
         s"decoded events.ts range [$lo, $hi] µs is outside [2000, 2100) — " +
           s"the parquet time unit of $sfDir/events.parquet likely changed; " +
           "fix Tables.decodeTs before trusting any windowed result")
-      tsChecked.add(key)
     }
-  }
 
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")

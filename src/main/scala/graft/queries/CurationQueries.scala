@@ -61,42 +61,40 @@ object CurationQueries {
     * (O(R²) corpus passes; measured 61→~4 s at the 10× scale set).
     * Returns (per-round (round, pair, n_pair) 1-row frames, final
     * symbolized corpus (doc_id, s) with merged symbols U+001F-joined). */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[DataFrame], DataFrame)]()
-  private def bpeRunShared(s: SparkSession, d: String): (Seq[DataFrame], DataFrame) =
-    bpeCache.computeIfAbsent((s, d), _ => {
-      // 4-piece persisted index (IndexStore, r11): the 3 per-round
-      // argmax rows + the final symbolized corpus — a second session
-      // reloads the learned merges instead of re-running the loop
-      val pieces = IndexStore.persistedMulti(s, d,
-          (1 to 3).map(r => s"bpe_top$r") :+ "bpe_corpus",
-          Seq("documents.parquet")) {
-      CacheStats.recordBuild("bpe_run")
-      val sep = ""
-      var cur = Tables.documents(s, d).select(col("doc_id"),
-        concat(lit(" "), array_join(tokens(col("text")), " "), lit(" ")).as("s"))
-        .localCheckpoint()
-      var tops: Seq[DataFrame] = Nil
-      for (r <- 1 to 3) {
-        val top1 = cur
-          .select(pos_ngrams(split(trim(col("s"), " "), " "), 2).as(Seq("pos", "gram")))
-          .groupBy("gram").agg(count(lit(1)).as("n"))
-          .orderBy(desc("n"), asc("gram")).limit(1)
+  private def bpeRunShared(s: SparkSession, d: String): (Seq[DataFrame], DataFrame) = {
+    val src = Seq("documents.parquet")
+    // 4-piece persisted index (IndexStore, r11): the 3 per-round argmax
+    // rows + the final symbolized corpus — a second session reloads the
+    // learned merges instead of re-running the loop
+    val pieces = SessionCache.get("bpe_run", s, d, src) {
+      IndexStore.persistedMulti(s, d,
+          (1 to 3).map(r => s"bpe_top$r") :+ "bpe_corpus", src) {
+        val sep = ""
+        var cur = Tables.documents(s, d).select(col("doc_id"),
+          concat(lit(" "), array_join(tokens(col("text")), " "), lit(" ")).as("s"))
           .localCheckpoint()
-        tops = tops :+ top1.select(lit(r).as("round"), col("gram").as("pair"),
-          col("n").as("n_pair"))
-        cur = cur.crossJoin(broadcast(top1.select(col("gram").as("g"))))
-          .withColumn("pat", concat(lit(" "), col("g"), lit(" ")))
-          .withColumn("rep",
-            concat(lit(" "), translate(col("g"), " ", sep), lit(" ")))
-          .withColumn("s", expr("replace(replace(s, pat, rep), pat, rep)"))
-          .select("doc_id", "s")
-          .localCheckpoint()
+        var tops: Seq[DataFrame] = Nil
+        for (r <- 1 to 3) {
+          val top1 = cur
+            .select(pos_ngrams(split(trim(col("s"), " "), " "), 2).as(Seq("pos", "gram")))
+            .groupBy("gram").agg(count(lit(1)).as("n"))
+            .orderBy(desc("n"), asc("gram")).limit(1)
+            .localCheckpoint()
+          tops = tops :+ top1.select(lit(r).as("round"), col("gram").as("pair"),
+            col("n").as("n_pair"))
+          cur = cur.crossJoin(broadcast(top1.select(col("gram").as("g"))))
+            .withColumn("pat", concat(lit(" "), col("g"), lit(" ")))
+            .withColumn("rep",
+              concat(lit(" "), translate(col("g"), " ", sep), lit(" ")))
+            .withColumn("s", expr("replace(replace(s, pat, rep), pat, rep)"))
+            .select("doc_id", "s")
+            .localCheckpoint()
+        }
+        tops :+ cur
       }
-      tops :+ cur
-      }
-      (pieces.init, pieces.last)
-    })
+    }
+    (pieces.init, pieces.last)
+  }
 
   // --- in-plan quality classifier (VERDICT r8 #3: the last missing
   // CCNet/fastText-style stage) -----------------------------------------
@@ -163,7 +161,7 @@ object CurationQueries {
     * [[TextQueries.postingsShared]] is already the distinct (doc_id, gh)
     * relation of the corpus, so the training path stops re-shingling the
     * text (tokens → arrays_zip → explode → xxhash over every doc,
-    * measured 7.8 s cold in QcPlanProbe) and derives buckets with one
+    * measured 7.8 s cold) and derives buckets with one
     * pmod over the index. distinct(pmod(distinct(gh))) ≡
     * distinct(pmod(gh)) — identical feature rows; the per-BATCH streaming
     * twin keeps deriving its features map-side from the batch text
@@ -298,14 +296,9 @@ object CurationQueries {
   /** One training run per (session, sfDir) — q_quality_classifier and
     * the streaming inference twin share the trained weight relation,
     * the same lifetime story as [[TextQueries.jaccardPairsShared]]. */
-  private val qcCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
   private[graft] def qcTrainShared(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
-    qcCache.computeIfAbsent((s, d), _ => {
-      CacheStats.recordBuild("qc_train")
-      qcTrain(s, d)
-    })
+    SessionCache.get("qc_train", s, d, Seq("documents.parquet"))(qcTrain(s, d))
 
   /** Label-free inference under a trained weight relation: per-doc
     * margin via the same exact-decimal dot product as training, keep =
@@ -481,7 +474,7 @@ object CurationQueries {
     // filter must beat the accuracy floor, separate en from non-en keep
     // rates by the pinned gap, and end below the w=0 loss ln 2 (i.e.
     // training actually descended). Floors pinned one notch under the
-    // measured deterministic minima ACROSS scales (QcProbe: acc
+    // measured deterministic minima ACROSS scales (acc
     // 0.988/0.984/0.917/0.910 and gap 0.97/0.96/0.80/0.78 at
     // sf0.001/0.01/0.1/10×; loss ≤ 0.53 everywhere — BASELINE.md r8).
     "q_quality_classifier" -> ((s, d) =>

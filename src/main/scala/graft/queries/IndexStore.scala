@@ -6,23 +6,21 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cross-session persistence for the maintained shared indexes
-  * (VERDICT r10 #7). The session-scoped ConcurrentHashMap caches
-  * (postings, Jaccard pair graph, CC labels, kNN graph, k-means/BPE
-  * runs, …) amortize builds WITHIN a SparkSession; a real deployment
-  * writes the index once and every later session/job RELOADS it. This
-  * store adds that layer: each index build routes through
-  * [[persisted]], which — when an index root is configured — reloads
-  * a fingerprinted parquet copy if present and writes one after the
-  * first build. The fingerprint hashes the source tables' (name, size,
-  * mtime) leaves RECURSIVELY (a partitioned table rewrites leaves
-  * inside subdirectories without touching the subdirectory's own
-  * status — ADVICE r11) plus a BUILDER VERSION tag (the blocking-cap
-  * constants and a code epoch — VERDICT r11 #3: a calibration/logic
-  * change between rounds must invalidate persisted indexes instead of
-  * serving output built by old logic), so regenerating the data OR
-  * changing the builder yields a DIFFERENT path and a stale index is
-  * never served (the ensureBucketedTables keying, generalized); stale
-  * fingerprint dirs are just orphans.
+  * (VERDICT r10 #7). [[SessionCache]] amortizes builds WITHIN a
+  * SparkSession; a real deployment writes the index once and every later
+  * session/job RELOADS it. This store adds that layer: an index build
+  * inside a [[SessionCache]] entry routes through [[persisted]], which —
+  * when an index root is configured — reloads a fingerprinted parquet
+  * copy if present and writes one after the first build. The directory
+  * name is the [[SessionCache.fingerprint]] of the source tables — the
+  * same content key as the in-memory entry — which includes a BUILDER
+  * VERSION tag (the blocking-cap constants and a code epoch — VERDICT
+  * r11 #3: a calibration/logic change between rounds must invalidate
+  * persisted indexes instead of serving output built by old logic), so
+  * regenerating the data OR changing the builder yields a DIFFERENT path
+  * and a stale index is never served; stale fingerprint dirs are just
+  * orphans. A reload is counted in [[CacheStats]] as a reload, never as
+  * a build.
   *
   * Opt-in by design: with no root configured (`spark.graft.index.dir`
   * conf or `GRAFT_INDEX_DIR` env), behavior is byte-identical to the
@@ -70,57 +68,14 @@ object IndexStore {
   @volatile private[graft] var builderVersion: String =
     s"r12:${Blocking.BandCap}:${Blocking.LshCap}:${Blocking.ChunkCap}:${Blocking.GramDfCap}"
 
-  /** (label, srcTables, dataset, builderVersion) → stable directory
-    * name. Mirrors the ensureBucketedTables fingerprint: leaf-file
-    * (root-relative path, length, mtime) of each source table —
-    * enumerated recursively so a rewrite inside a partitioned table's
-    * subdirectory always changes the key — md5'd for a path-safe key.
-    * Every FileSystem is resolved FROM the path it probes (source
-    * tables and index root can live on different filesystems). */
+  /** Directory of index piece `label`: the [[SessionCache.fingerprint]]
+    * of its source tables, so regenerating the data or bumping the
+    * builder version yields a different path. */
   private def indexPath(s: SparkSession, d: String, label: String,
-      srcTables: Seq[String], rootDir: String): String = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val fp = srcTables.sorted.flatMap { t =>
-      val p = new Path(s"$d/$t")
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Seq(s"$t:missing")
-      else {
-        val st = fs.getFileStatus(p)
-        val leaves =
-          if (st.isDirectory) {
-            val it = fs.listFiles(p, true) // recursive: nested leaves count
-            val buf = scala.collection.mutable.ArrayBuffer
-              .empty[org.apache.hadoop.fs.FileStatus]
-            while (it.hasNext) buf += it.next()
-            buf.sortBy(_.getPath.toString).toSeq
-          } else Seq(st)
-        // table-ROOT-RELATIVE path, not basename (ADVICE r12): partition
-        // values live in directory names (date=2024-01-01/part-0.parquet),
-        // so a basename-only fingerprint is blind to a renamed/moved
-        // partition dir or same-named part files swapped between
-        // partitions — data Spark reads changes, key doesn't, and a
-        // stale persisted index is silently served.
-        val rootStr = st.getPath.toString
-        leaves.map(l =>
-          s"${l.getPath.toString.stripPrefix(rootStr)}:${l.getLen}:${l.getModificationTime}")
-      }
-    }.mkString("|")
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest((d + "#" + builderVersion + "#" + fp).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    s"$rootDir/${label}_$md"
-  }
+      srcTables: Seq[String], rootDir: String): String =
+    s"$rootDir/${label}_${SessionCache.fingerprint(s, d, srcTables)}"
 
   private val pathLocks = new ConcurrentHashMap[String, Object]()
-
-  private val reloads = new ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicLong]()
-  private[graft] def recordReload(label: String): Unit =
-    reloads.computeIfAbsent(label,
-      _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
-  private[graft] def reloadCount(label: String): Long = {
-    val c = reloads.get(label); if (c == null) 0L else c.get()
-  }
 
   /** Atomic publish: write `df` to a unique sibling temp dir, rename
     * into place. Rename-if-absent is the cross-JVM arbitration — the
@@ -305,9 +260,9 @@ object IndexStore {
     * every piece (first JVM wins per piece — a racing loser serves its
     * own build this session and later sessions reload the winner's).
     * With no root configured, returns `build` localCheckpointed —
-    * exactly the pre-r11 session-cache materialization. `build` is
-    * expected to bump CacheStats itself, so reloads keep the build
-    * counter untouched (the CrossSessionIndexSpec assertion).
+    * exactly the pre-r11 session-cache materialization. A reload tells
+    * [[SessionCache]], so the enclosing entry counts no build (the
+    * CrossSessionIndexSpec assertion).
     * `onBuilt` is a test seam: it runs between the build and the
     * publish, where a racing JVM's publish can land (the window the
     * rename arbitration exists for). */
@@ -327,7 +282,7 @@ object IndexStore {
         val conf = s.sparkContext.hadoopConfiguration
         val resolved = paths.map(resolvePublished(s, _))
         if (resolved.forall(_.isDefined)) {
-          labels.foreach(recordReload)
+          SessionCache.recordReload(labels)
           resolved.map(r => s.read.parquet(r.get.toString))
         } else {
           val built = build

@@ -40,10 +40,8 @@ object SketchQueries {
     * while depth grows only logarithmically — ln(1000·ndv) ≈ 28 rows
     * at 10⁹ keys. Cached per (session, dataset) — the ndv count is one
     * bounded agg. */
-  private val epsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Double, Double, Boolean)]()
-  private def userCmsParams(s: SparkSession, d: String): (Double, Double, Boolean) =
-    epsCache.computeIfAbsent((s, d), _ => {
+  private[graft] def userCmsParams(s: SparkSession, d: String): (Double, Double, Boolean) =
+    SessionCache.get("user_cms_params", s, d, Seq("events.parquet")) {
       val ndv = Tables.events(s, d).select("user_id").distinct().count()
       val ideal = 1.0 / (16.0 * math.max(1L, ndv))
       val exactRegime = ideal >= 1e-5
@@ -51,7 +49,7 @@ object SketchQueries {
         if (exactRegime) 0.999
         else math.min(1.0 - 1e-15, 1.0 - 0.001 / ndv)
       (math.max(1e-5, ideal), conf, exactRegime)
-    })
+    }
 
   val queries: Map[String, Q] = Map(
 

@@ -129,14 +129,12 @@ object TextQueries {
     * a storage-backed postings table maintained incrementally alongside
     * the corpus (exactly the artifact q_dedup_incremental's framing
     * assumes); locally it is one localCheckpoint (~16 B per (doc, gram)). */
-  private val postingsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private[graft] def postingsShared(s: SparkSession, d: String): DataFrame =
-    postingsCache.computeIfAbsent((s, d), _ =>
-      IndexStore.persisted(s, d, "postings", Seq("documents.parquet")) {
-        CacheStats.recordBuild("postings")
-        postingsOf(s, d)
-      })
+    SessionCache.get("postings", s, d, DocTables) {
+      IndexStore.persisted(s, d, "postings", DocTables)(postingsOf(s, d))
+    }
+
+  private val DocTables = Seq("documents.parquet")
 
   /**
    * Exact n-gram Jaccard for an (id_a, id_b) candidate pair set, via the
@@ -160,42 +158,6 @@ object TextQueries {
         round(coalesce(col("inter"), lit(0L)).cast("double")
           / (col("sz_a") + col("sz_b")
              - coalesce(col("inter"), lit(0L))).cast("double"), 4).as("jaccard"))
-  }
-
-  /** Token-FREQUENCY cosine per candidate pair — the similarity the
-    * SimHash LSH actually estimates (Charikar 2002: each signature bit
-    * disagrees with probability θ/π, θ the angle between the two
-    * token-frequency vectors), so it is the verify metric whose floor
-    * survives every corpus (unlike an unweighted token-SET overlap,
-    * which frequency-skewed pairs push arbitrarily low while their
-    * weighted angle stays tiny — the failure the 10× sweep caught in
-    * round 15). Bounded like [[verifyJaccard]]: frequency postings are
-    * keyed joins against the (small) pair set, never all-pairs; the
-    * per-doc norms ride a groupBy over the pair members only. */
-  private[graft] def weightedCosine(s: SparkSession, d: String,
-      pairs: DataFrame): DataFrame = {
-    val freq = Tables.documents(s, d)
-      .select(col("doc_id"), explode(tokens(col("text"))).as("t"))
-      .select(col("doc_id"), xxhash64(col("t")).as("gh"))
-      .groupBy("doc_id", "gh").agg(count(lit(1)).as("cnt"))
-    val members = pairs.select(col("id_a").as("doc_id"))
-      .unionAll(pairs.select(col("id_b").as("doc_id"))).distinct()
-    val fp = freq.join(members, Seq("doc_id"), "left_semi")
-      .localCheckpoint() // read by both dot sides and the norms
-    val n2 = fp.groupBy("doc_id").agg(sum(col("cnt") * col("cnt")).as("n2"))
-    val dots = pairs.select("id_a", "id_b")
-      .join(fp.toDF("id_a", "gh", "ca"), "id_a")
-      .join(fp.toDF("id_b", "gh", "cb"), Seq("id_b", "gh"))
-      .groupBy("id_a", "id_b").agg(sum(col("ca") * col("cb")).as("dot"))
-    pairs.select("id_a", "id_b")
-      .join(dots, Seq("id_a", "id_b"), "left")
-      .join(n2.toDF("id_a", "n2a"), "id_a")
-      .join(n2.toDF("id_b", "n2b"), "id_b")
-      .select(col("id_a"), col("id_b"),
-        when(col("n2a") > 0 && col("n2b") > 0,
-          round(coalesce(col("dot"), lit(0L)).cast("double")
-            / sqrt(col("n2a").cast("double") * col("n2b").cast("double")), 4))
-          .otherwise(lit(0.0)).as("wcos"))
   }
 
   /**
@@ -253,14 +215,10 @@ object TextQueries {
     * see a dead session's checkpoint blocks). The 100 TB analogue is
     * writing the pair table to storage once and scanning it from every
     * consumer. */
-  private val pairGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private[graft] def jaccardPairsShared(s: SparkSession, d: String): DataFrame =
-    pairGraphCache.computeIfAbsent((s, d), _ =>
-      IndexStore.persisted(s, d, "jaccard_pairs", Seq("documents.parquet")) {
-        CacheStats.recordBuild("jaccard_pairs")
-        jaccardPairs(s, d)
-      })
+    SessionCache.get("jaccard_pairs", s, d, DocTables) {
+      IndexStore.persisted(s, d, "jaccard_pairs", DocTables)(jaccardPairs(s, d))
+    }
 
   /** 1-row `hot_grams` count over the shared posting index — the
     * accounting twin of [[jaccardPairs]]'s hot-gram drop (the oracle
@@ -277,13 +235,9 @@ object TextQueries {
     * from the corpus (qchainz prefix), so no cross edges exist — and
     * the oracles brute-force the UNION corpus, so a violated
     * disjointness assumption hash-fails instead of passing silently. */
-  private val chainUnionCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def chainUnionPairs(s: SparkSession, d: String): DataFrame =
-    chainUnionCache.computeIfAbsent((s, d), _ =>
-      IndexStore.persisted(s, d, "chain_union_pairs",
-          Seq("documents.parquet")) {
-        CacheStats.recordBuild("chain_union_pairs")
+    SessionCache.get("chain_union_pairs", s, d, DocTables) {
+      IndexStore.persisted(s, d, "chain_union_pairs", DocTables) {
         import s.implicits._
         val chainDf = plantedChainDocs.toDF("doc_id", "text")
         val chainPostings = gramHashPostings(chainDf).distinct()
@@ -294,7 +248,8 @@ object TextQueries {
         val chainPairs = verifyJaccard(chainCand, chainPostings)
           .filter(col("jaccard") >= 0.8).select("id_a", "id_b")
         jaccardPairsShared(s, d).select("id_a", "id_b").unionAll(chainPairs)
-      })
+      }
+    }
 
   /** Connected-component labels (node → min-id cluster) over the shared
     * Jaccard ≥ 0.8 pair graph: iterative min-label propagation to a
@@ -305,42 +260,40 @@ object TextQueries {
     * to keep lineage flat. Cached per (session, sfDir) — cluster
     * formation (q_dedup_clusters) and canonical selection
     * (q_cluster_canonical) consume the same labels. */
-  private val ccCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private[graft] def ccLabelsShared(s: SparkSession, d: String): DataFrame =
-    ccCache.computeIfAbsent((s, d), _ =>
-      IndexStore.persisted(s, d, "cc_labels", Seq("documents.parquet")) {
-      CacheStats.recordBuild("cc_labels")
-      val pairs = jaccardPairsShared(s, d).select("id_a", "id_b")
-      val edges = pairs.toDF("a", "b")
-        .union(pairs.select(col("id_b"), col("id_a"))).localCheckpoint()
-      var labels = pairs.select(col("id_a").as("node"))
-        .union(pairs.select(col("id_b"))).distinct()
-        .withColumn("cluster", col("node")).localCheckpoint()
-      var converged = false
-      var iter = 0
-      // 32 rounds ≈ graph diameter 2^32 under pointer-halving-free
-      // propagation is far beyond any dup cluster; hitting the cap means
-      // a bug, and silently returning half-propagated labels would be a
-      // WRONG answer — fail loudly instead (the oracle would catch it,
-      // but a library user has no oracle).
-      while (!converged && iter < 32) {
-        val nbrMin = edges.join(labels, col("a") === col("node"))
-          .groupBy(col("b").as("n2")).agg(min("cluster").as("nbr_min"))
-        val next = labels.join(nbrMin, col("node") === col("n2"), "left")
-          .select(col("node"),
-            least(col("cluster"), coalesce(col("nbr_min"), col("cluster")))
-              .as("cluster"))
-          .localCheckpoint()
-        converged = next.join(labels.withColumnRenamed("cluster", "prev"), "node")
-          .filter(col("cluster") =!= col("prev")).isEmpty
-        labels = next
-        iter += 1
+    SessionCache.get("cc_labels", s, d, DocTables) {
+      IndexStore.persisted(s, d, "cc_labels", DocTables) {
+        val pairs = jaccardPairsShared(s, d).select("id_a", "id_b")
+        val edges = pairs.toDF("a", "b")
+          .union(pairs.select(col("id_b"), col("id_a"))).localCheckpoint()
+        var labels = pairs.select(col("id_a").as("node"))
+          .union(pairs.select(col("id_b"))).distinct()
+          .withColumn("cluster", col("node")).localCheckpoint()
+        var converged = false
+        var iter = 0
+        // 32 rounds ≈ graph diameter 2^32 under pointer-halving-free
+        // propagation is far beyond any dup cluster; hitting the cap means
+        // a bug, and silently returning half-propagated labels would be a
+        // WRONG answer — fail loudly instead (the oracle would catch it,
+        // but a library user has no oracle).
+        while (!converged && iter < 32) {
+          val nbrMin = edges.join(labels, col("a") === col("node"))
+            .groupBy(col("b").as("n2")).agg(min("cluster").as("nbr_min"))
+          val next = labels.join(nbrMin, col("node") === col("n2"), "left")
+            .select(col("node"),
+              least(col("cluster"), coalesce(col("nbr_min"), col("cluster")))
+                .as("cluster"))
+            .localCheckpoint()
+          converged = next.join(labels.withColumnRenamed("cluster", "prev"), "node")
+            .filter(col("cluster") =!= col("prev")).isEmpty
+          labels = next
+          iter += 1
+        }
+        require(converged,
+          s"dedup-cluster label propagation did not converge in $iter rounds")
+        labels
       }
-      require(converged,
-        s"dedup-cluster label propagation did not converge in $iter rounds")
-      labels
-    })
+    }
 
   /** Positional rolling-window hashes: one 64-bit hash per W-token
     * window with its 1-based start position — the exact-substring-dedup
@@ -418,16 +371,11 @@ object TextQueries {
   private[graft] def simhashSigs(s: SparkSession, d: String): DataFrame =
     simhashSigsOf(Tables.documents(s, d).select("doc_id", "text"))
 
-  /**
-   * SimHash hamming ≤ 3 pairs: blocking on the 4 16-bit signature chunks
-   * (pigeonhole: hamming≤3 pairs share ≥1 exact chunk) → join per block,
-   * then verify the distance — EXACT for the hamming predicate, never
-   * all-pairs.
-   */
-  private[graft] def simhashPairs(s: SparkSession, d: String): DataFrame =
-    simhashPairsFromSigs(simhashSigs(s, d))._1
-
-  /** Returns (hamming ≤ 3 pairs, 1-row overflow_buckets count). The
+  /** SimHash hamming ≤ 3 pairs: blocking on the 4 16-bit signature
+    * chunks (pigeonhole: hamming≤3 pairs share ≥1 exact chunk) → join
+    * per block, then verify the distance — EXACT for the hamming
+    * predicate, never all-pairs.
+    * Returns (hamming ≤ 3 pairs, 1-row overflow_buckets count). The
     * chunk equi-join goes through the shared CAPPED enumerator
     * (round 11): a degenerate signature shared by b documents puts b
     * members in all four chunk buckets and would emit 4·b² join rows;

@@ -93,24 +93,22 @@ object VectorQueries {
   /** One kNN-graph build per (session, dataset) — the graph is the
     * INDEX (built once, amortized over every probe, the kmRunShared
     * lifetime); the per-query cost is the beam search only. */
-  private val graphCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame, Long)]()
   private def knnGraphShared(s: SparkSession, d: String): (DataFrame, DataFrame, Long) =
-    graphCache.computeIfAbsent((s, d), _ => {
+    SessionCache.get("knn_graph", s, d, EmbTables) {
       val emb = plantedEmb(s, d).localCheckpoint()
       // edges + the 1-row overflow count persist as one two-piece index
       // (IndexStore, r11): a second session reloads the graph instead
       // of re-pairing the corpus; emb itself is a cheap table read
       val Seq(edges, meta) = IndexStore.persistedMulti(s, d,
-          Seq("knn_graph_edges", "knn_graph_meta"),
-          Seq("embeddings.parquet")) {
-        CacheStats.recordBuild("knn_graph")
+          Seq("knn_graph_edges", "knn_graph_meta"), EmbTables) {
         val (out4, overflowN) = buildKnnOut4(emb, knnGraphP(emb.count()))
         import s.implicits._
         Seq(symmetrized(out4), Seq(overflowN).toDF("overflow_buckets"))
       }
       (emb, edges, meta.collect()(0).getLong(0))
-    })
+    }
+
+  private val EmbTables = Seq("embeddings.parquet")
 
   /** LSH hash width targeting mean bucket occupancy 64. */
   private[graft] def knnGraphP(n: Long): Int =
@@ -212,12 +210,9 @@ object VectorQueries {
     * lifetime as knnGraphShared — a deployment does not rebuild its
     * base graph per ingest batch). Holds (emb, base, delta, P,
     * base out-edges, base bucket table), all checkpointed. */
-  private val graphIncrBase = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    (DataFrame, DataFrame, DataFrame, Int, DataFrame, DataFrame)]()
   private def graphIncrBaseShared(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, Int, DataFrame, DataFrame) =
-    graphIncrBase.computeIfAbsent((s, d), _ => {
+    SessionCache.get("graph_incr_base", s, d, EmbTables) {
       val emb = plantedEmb(s, d).localCheckpoint()
       val isDelta = col("vec_id") % 10 === 7 && col("vec_id") < 9200000L
       val base = emb.filter(!isDelta).localCheckpoint()
@@ -226,13 +221,11 @@ object VectorQueries {
       // the two expensive fold inputs (base out-edges + base bucket
       // table) persist as one index; emb/base/delta are cheap filters
       val Seq(baseOut4, bBase) = IndexStore.persistedMulti(s, d,
-          Seq("graph_incr_base_out4", "graph_incr_base_buckets"),
-          Seq("embeddings.parquet")) {
-        CacheStats.recordBuild("graph_incr_base")
+          Seq("graph_incr_base_out4", "graph_incr_base_buckets"), EmbTables) {
         Seq(buildKnnOut4(base, p)._1, hyperplaneBuckets(base, L = 12, P = p))
       }
       (emb, base, delta, p, baseOut4, bBase)
-    })
+    }
 
   private[graft] def graphIncremental(s: SparkSession, d: String)
       : (DataFrame, DataFrame, Long, Long, Long, Int, Long) = {
@@ -335,7 +328,7 @@ object VectorQueries {
   }
 
   /** Pinned one notch under the measured deterministic batch recall of
-    * q_knn_join_lsh (NearDupProbe-style calibration: 15 possible hits —
+    * q_knn_join_lsh (calibration: 15 possible hits —
     * 5 queries × top-3; measured 11 at sf0.001 and 14 at sf0.01; the
     * xxhash planes are fixed, so the hit totals are reproducible on any
     * cluster). */
@@ -672,14 +665,13 @@ object VectorQueries {
     * keys every training parameter (family, k, Lloyd steps, planted-
     * corpus flag); the IndexStore fingerprint keys the source table,
     * so a regenerated corpus invalidates instead of serving a stale
-    * quantizer (CrossSessionIndexSpec pins it). With no root
-    * configured this is exactly the session-scoped localCheckpoint
-    * the call sites had — byte-identical behavior. */
+    * quantizer (CrossSessionIndexSpec pins it). Within a session the
+    * trained codebook is a [[SessionCache]] entry like every other
+    * shared index. */
   private def persistedCodebook(s: SparkSession, d: String, label: String)
       (build: => DataFrame): DataFrame =
-    IndexStore.persisted(s, d, label, Seq("embeddings.parquet")) {
-      CacheStats.recordBuild(label)
-      build
+    SessionCache.get(label, s, d, EmbTables) {
+      IndexStore.persisted(s, d, label, EmbTables)(build)
     }
 
   private[graft] def pqTop10(s: SparkSession, d: String,
@@ -841,7 +833,7 @@ object VectorQueries {
   /** PQ gate floor over the PLANTED corpus: 8 = the pigeonhole bound
     * for an all-planted top-10 (see plantedEmb). Raw-corpus recall
     * (bounded at 2 by the clusterless synthetic data — the worst case
-    * for a 16-entry codebook) stays measured in PqSpec/NearDupProbe. */
+    * for a 16-entry codebook) stays measured in PqSpec. */
   private val pqFloor = 8
 
   /** (vec_id, cid) seed-id relation of the k-codebook: the ≤`k` smallest
@@ -1136,7 +1128,7 @@ object VectorQueries {
     * bound for an all-planted top-10 (see plantedEmb). The raw-corpus
     * compound floor (1 — bounded by both the nProbe/n_cells scan
     * fraction and the 16-entry codebook on clusterless data) stays
-    * measured in IvfPqSpec/NearDupProbe. */
+    * measured in IvfPqSpec. */
   private val ivfpqFloor = 8
 
   private val kmDims = 1 to 8
@@ -1210,18 +1202,15 @@ object VectorQueries {
     * reference. Assignment + centroids are tiny (n_vecs × 10 cols /
     * k rows), so both are localCheckpointed once and shared for the
     * session, same lifetime story as [[TextQueries.jaccardPairsShared]]. */
-  private val kmCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private def kmRunShared(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    kmCache.computeIfAbsent((s, d), _ => {
-      val Seq(assigned, cent) = IndexStore.persistedMulti(s, d,
-          Seq("km_assigned", "km_centroids"), Seq("embeddings.parquet")) {
-        CacheStats.recordBuild("km_run")
+  private def kmRunShared(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val Seq(assigned, cent) = SessionCache.get("km_run", s, d, EmbTables) {
+      IndexStore.persistedMulti(s, d, Seq("km_assigned", "km_centroids"), EmbTables) {
         val (a, c) = kmRun(s, d)
         Seq(a, c)
       }
-      (assigned, cent)
-    })
+    }
+    (assigned, cent)
+  }
 
   /** Hybrid retrieval fusion (q_hybrid_retrieval / q_rag_e2e): BM25 and
     * dense-cosine legs each cut to their bounded top-20 FIRST
@@ -1613,7 +1602,7 @@ object VectorQueries {
     // surfaces the whole cluster — the gate now FAILS if an index
     // misses the one real cluster in the data, instead of documenting
     // that clusterless data bounds recall at 1–3 (the r1–r8 state; raw
-    // recalls remain measured in NearDupProbe/PqSpec/IvfPqSpec for the
+    // recalls remain measured in PqSpec/IvfPqSpec for the
     // honest no-structure story).
     "q_knn_ivf" -> ((s, d) =>
       recallFlag(ivfTop10(s, d, planted = true), s, d, floor = 8,

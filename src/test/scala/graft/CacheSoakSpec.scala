@@ -13,17 +13,20 @@ import graft.queries.CacheStats
   * (VERDICT r9 #4): a 100 TB deployment runs concurrent queries on one
   * long-lived session, but the maintained indices (postings, pair
   * graph, CC labels, BPE run, k-means run, quality-classifier weights,
-  * kNN graph) had only ever been exercised sequentially. Three racing
-  * invocations of every consumer must (a) not deadlock — Spark jobs run
-  * INSIDE ConcurrentHashMap.computeIfAbsent, so a reentrant or
-  * cross-locking build would hang here, (b) build each shared
-  * intermediate exactly ONCE (CacheStats counters bumped only in the
-  * compute lambdas), and (c) return identical rows on every thread. */
+  * kNN graph, bucketed/CBO catalog tables) had only ever been exercised
+  * sequentially. Three racing invocations of every consumer must
+  * (a) not deadlock — every SessionCache build runs Spark jobs under its
+  * own entry's lock, and builds nest (cc_labels → jaccard_pairs →
+  * postings), so a build that locked the whole map, or two entries that
+  * waited on each other, would hang here, (b) build each shared
+  * intermediate exactly ONCE (CacheStats counts a build only when
+  * SessionCache actually runs one), and (c) return identical rows on
+  * every thread. */
 class CacheSoakSpec extends AnyFunSuite {
   private lazy val spark = GraftSpark.spark
 
   test("racing consumers: one build per shared cache, identical results, no deadlock") {
-    // fresh cache key: the caches key on the dataset-dir STRING, so a
+    // fresh cache key: the cache keys on the dataset-dir STRING, so a
     // "/." suffix reaches the same files through a key no prior suite
     // in this shared-session JVM has populated
     val d = GraftSpark.sf + "/."
@@ -55,8 +58,8 @@ class CacheSoakSpec extends AnyFunSuite {
       } yield Future {
         (q, rep, SparkEntry.queries(q)(spark, d).collect().map(_.toString).toSeq)
       }
-      // a deadlocked computeIfAbsent (Spark job inside a bin lock that a
-      // second thread's build needs) would time this out
+      // a deadlocked build (a Spark job holding a lock that a second
+      // thread's build needs) would time this out
       val results = Await.result(Future.sequence(futures), 15.minutes)
 
       results.groupBy(_._1).foreach { case (q, runs) =>

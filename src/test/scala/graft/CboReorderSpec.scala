@@ -16,6 +16,7 @@ class CboReorderSpec extends AnyFunSuite {
     // run the contract query once: builds + analyzes the catalog tables
     // and returns the flag computed from the two optimized plans
     val rows = SparkEntry.queries("q_cbo_reorder")(spark, sf).collect()
+    val (li, ord, cust) = graft.queries.WarehouseQueries.ensureCboTables(spark, sf)
     assert(rows.length === 1)
     assert(rows(0).getBoolean(3),
       "CBO + column stats must change the join order on the chain query")
@@ -24,16 +25,16 @@ class CboReorderSpec extends AnyFunSuite {
     // joins the fact to orders FIRST; with CBO + stats the filtered
     // customer side must be joined before the fact is touched
     val sql =
-      """SELECT c_mktsegment, count(*) AS n_rows,
+      s"""SELECT c_mktsegment, count(*) AS n_rows,
         |  round(sum(CAST(l_extendedprice * (1.0 - l_discount)
         |    AS DECIMAL(30,12))), 4) AS revenue
-        |FROM cbo_li JOIN cbo_ord ON l_orderkey = o_orderkey
-        |  JOIN cbo_cust ON o_custkey = c_custkey
+        |FROM $li JOIN $ord ON l_orderkey = o_orderkey
+        |  JOIN $cust ON o_custkey = c_custkey
         |WHERE c_mktsegment = 'BUILDING'
         |GROUP BY c_mktsegment""".stripMargin
     def leafOrder(sess: org.apache.spark.sql.SparkSession): Seq[String] = {
       val plan = sess.sql(sql).queryExecution.optimizedPlan.toString
-      Seq("cbo_li", "cbo_ord", "cbo_cust")
+      Seq(li, ord, cust)
         .map(t => t -> plan.indexOf(s"spark_catalog.default.$t"))
         .sortBy(_._2).map(_._1)
     }
@@ -45,11 +46,11 @@ class CboReorderSpec extends AnyFunSuite {
     val off = leafOrder(sOff)
     val on = leafOrder(sOn)
     info(s"leaf order off=$off on=$on")
-    assert(off === Seq("cbo_li", "cbo_ord", "cbo_cust"),
+    assert(off === Seq(li, ord, cust),
       s"without stats the syntactic left-deep order must hold: $off")
     assert(on !== off, s"CBO must reorder: $on")
     // the small filtered dimension must come BEFORE the fact under CBO
-    assert(on.indexOf("cbo_cust") < on.indexOf("cbo_li"),
+    assert(on.indexOf(cust) < on.indexOf(li),
       s"CBO should push the filtered customer join below the fact: $on")
 
     // semantics preserved: both sessions produce the identical row

@@ -28,7 +28,7 @@ class CrossSessionIndexSpec extends AnyFunSuite {
   test("second session reloads the postings index: zero new builds, identical rows") {
     val dir = Files.createTempDirectory("graft_idx").toString
     val b0 = CacheStats.buildCount("postings")
-    val r0 = IndexStore.reloadCount("postings")
+    val r0 = CacheStats.reloadCount("postings")
     val s1 = sessionWithRoot(dir)
     val rows1 = TextQueries.postingsShared(s1, sf)
       .orderBy("doc_id", "gh").collect().toSeq
@@ -38,7 +38,7 @@ class CrossSessionIndexSpec extends AnyFunSuite {
       .orderBy("doc_id", "gh").collect().toSeq
     assert(CacheStats.buildCount("postings") === b0 + 1,
       "second session must RELOAD, not rebuild")
-    assert(IndexStore.reloadCount("postings") === r0 + 1)
+    assert(CacheStats.reloadCount("postings") === r0 + 1)
     assert(rows1 === rows2)
   }
 
@@ -123,7 +123,7 @@ class CrossSessionIndexSpec extends AnyFunSuite {
     // Hadoop-API resolution path a remote deployment takes.
     val dir = "file:" + Files.createTempDirectory("graft_idx_uri").toString
     val b0 = CacheStats.buildCount("postings")
-    val r0 = IndexStore.reloadCount("postings")
+    val r0 = CacheStats.reloadCount("postings")
     val s1 = sessionWithRoot(dir)
     val rows1 = TextQueries.postingsShared(s1, sf)
       .orderBy("doc_id", "gh").collect().toSeq
@@ -133,7 +133,7 @@ class CrossSessionIndexSpec extends AnyFunSuite {
       .orderBy("doc_id", "gh").collect().toSeq
     assert(CacheStats.buildCount("postings") === b0 + 1,
       "second session must RELOAD through the Hadoop FS path")
-    assert(IndexStore.reloadCount("postings") === r0 + 1)
+    assert(CacheStats.reloadCount("postings") === r0 + 1)
     assert(rows1 === rows2)
   }
 
@@ -356,7 +356,7 @@ class CrossSessionIndexSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_idx_cb").toString
     val label = "pq_cb256_s1_p"
     val b0 = CacheStats.buildCount(label)
-    val r0 = IndexStore.reloadCount(label)
+    val r0 = CacheStats.reloadCount(label)
     val s1 = sessionWithRoot(dir)
     val rows1 = VectorQueries.pq8Top10(s1, sf, planted = true)
       .orderBy("vec_id").collect().toSeq
@@ -366,7 +366,7 @@ class CrossSessionIndexSpec extends AnyFunSuite {
       .orderBy("vec_id").collect().toSeq
     assert(CacheStats.buildCount(label) === b0 + 1,
       "second session must reload the trained codebook, not retrain")
-    assert(IndexStore.reloadCount(label) === r0 + 1)
+    assert(CacheStats.reloadCount(label) === r0 + 1)
     assert(rows1 === rows2)
   }
 
