@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.streaming.StreamingPipelines.childSession
 
 /**
  * Relational operator inventory (SURVEY.md §2b/2d/2e/2f/2g): one named
@@ -18,6 +19,9 @@ import graft.Tables
 object RelationalQueries {
 
   private def r4(c: Column): Column = round(c, 4)
+
+  /** Caller confs a child session keeps: they affect rows/plan sizing. */
+  private val CarriedConfs = Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone")
 
   /** Derived partsupp relation — the synthetic testdata ships no
     * partsupp table (the reason Q2/Q11/Q16/Q20 sat out rounds 8–9a), so
@@ -360,11 +364,7 @@ object RelationalQueries {
       // an isolated session clone (shared SparkContext, fresh SQL conf and
       // ExperimentalMethods) carries the rule, and the caller's session is
       // never mutated — no later band join can silently inherit W=100.
-      val clone = s.newSession()
-      // runtime conf.set values don't propagate to a clone (only builder
-      // options do) — carry over the two that affect results/plan sizing
-      Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone")
-        .foreach(k => s.conf.getOption(k).foreach(clone.conf.set(k, _)))
+      val clone = childSession(s, CarriedConfs: _*)
       val scoped = graft.Graft.enableRangeBinning(clone, binSize = 100.0)
       val sup = Tables.supplier(scoped, d).select(col("s_suppkey"),
         (col("s_acctbal") - 50.0d).as("lo"), (col("s_acctbal") + 50.0d).as("hi"))
@@ -624,7 +624,7 @@ object RelationalQueries {
     // pruning + plan equality with the plain join).
     "q_bucketed_join" -> ((s, d) => {
       val (li, ord) = ensureBucketedTables(s, d)
-      val s2 = s.newSession()
+      val s2 = childSession(s)
       s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val joined = s2.table(li)
         .join(s2.table(ord), col("l_orderkey") === col("o_orderkey"))
@@ -661,9 +661,7 @@ object RelationalQueries {
     // the result-invariance twin (filter on == filter off, row for
     // row).
     "q_runtime_filter" -> ((s, d) => {
-      val clone = s.newSession()
-      Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone")
-        .foreach(k => s.conf.getOption(k).foreach(clone.conf.set(k, _)))
+      val clone = childSession(s, CarriedConfs: _*)
       clone.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       clone.conf.set(
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.streaming.StreamingPipelines.childSession
 
 /**
  * Source-format coverage (SURVEY.md §2a): csv / json / text ingest with
@@ -379,7 +380,7 @@ object SourceQueries {
     // tables without shuffling either; broadcast is disabled so the
     // join can't dodge the demonstration.
     "q_spj_join" -> ((s, d) => {
-      val s2 = s.newSession()
+      val s2 = childSession(s)
       s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val a = s2.read.format("graftpart").option("rows", 7000).load()

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.WelfordVariance
 import graft.functions.{bloom_agg, bloom_might_contain}
+import graft.streaming.StreamingPipelines.childSession
 
 /**
  * Warehouse / data-layout operators (SURVEY.md §2, round 5): the
@@ -792,9 +793,9 @@ object WarehouseQueries {
           .map(t => t -> plan.indexOf(s"spark_catalog.default.$t"))
           .sortBy(_._2).map(_._1)
       }
-      val sOff = s.newSession()
+      val sOff = childSession(s)
       sOff.conf.set("spark.sql.cbo.enabled", "false")
-      val sOn = s.newSession()
+      val sOn = childSession(s)
       sOn.conf.set("spark.sql.cbo.enabled", "true")
       sOn.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
       val reordered = leafOrder(sOn) != leafOrder(sOff)
@@ -1059,7 +1060,7 @@ object WarehouseQueries {
     // closure UDF, which the engine-wide PlanShapeSpec lint bans). The
     // oracle inlines the same bodies by hand.
     "q_sql_udf" -> ((s, d) => {
-      val s2 = s.newSession() // temp functions are session-scoped
+      val s2 = childSession(s) // temp functions are session-scoped
       Tables.orders(s2, d).createOrReplaceTempView("orders_udf")
       s2.sql("""CREATE OR REPLACE TEMPORARY FUNCTION disc_price(
                |  price DOUBLE, pri STRING) RETURNS DOUBLE
@@ -1088,7 +1089,7 @@ object WarehouseQueries {
     // temp view stay scoped). The oracle computes the same totals
     // set-at-once; n_iters pins that the loop genuinely ran 7 times.
     "q_sql_scripting" -> ((s, d) => {
-      val s2 = s.newSession()
+      val s2 = childSession(s)
       s2.conf.set("spark.sql.scripting.enabled", "true")
       Tables.orders(s2, d).createOrReplaceTempView("orders_script")
       s2.sql("""

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.functions._
@@ -180,59 +181,66 @@ object StreamingPipelines {
       .withColumn("ts", graft.Tables.decodeTs(col("ts"), tsType))
   }
 
-  /** Run a streaming DF to completion into a memory sink, return the table.
-    *
-    * State partition count is sized DOWN for the demo scale: a stateful
-    * operator materializes one state store per shuffle partition per run
-    * (32 RocksDB/HDFS stores for kilobytes of state is pure setup cost;
-    * 8 → 4 measured another ~15% off the per-pipeline fixed cost with
-    * identical ordered outputs — results are partitioning-independent).
-    * The count is pinned into the checkpoint at first batch, so this is
-    * the knob a real deployment sizes UP with state volume — the point is
-    * that it tracks state size, not executor count. Scoped to the
-    * streaming execution: the conf is restored once the query finishes,
-    * so downstream batch post-processing keeps the session default.
-    */
-  def runToMemory(spark: SparkSession, df: DataFrame, name: String,
-      mode: OutputMode, singleBatch: Boolean = false): DataFrame = {
-    val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.get(key)
-    spark.conf.set(key, "4")
-    try {
-      // Under TimeMode.ProcessingTime (state TTL / proc-time timers) the
-      // engine never goes idle — a timer-driven batch is always pending,
-      // so an AvailableNow run never reaches its end marker and
-      // processAllAvailable never returns (both verified hanging). The
-      // one trigger that provably terminates there is Trigger.Once:
-      // ALL available data in one batch, then stop.
-      val writer = df.writeStream.outputMode(mode)
-        .format("memory").queryName(name)
-      val q = writer.trigger(
-        if (singleBatch) Trigger.Once() else Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally spark.conf.set(key, prior)
-    spark.table(name)
+  /** Spark's codegen cache is keyed on (context classloader, code). With
+    * artifact isolation on, a session's tasks run in a per-session-UUID
+    * executor classloader, so every fresh session (each stream's clone,
+    * each child session) recompiled every generated class it touched.
+    * The engine adds no session artifacts, so isolation protects nothing
+    * here; off, tasks share the executor's default session and each
+    * class compiles once per JVM. Fixed at a session's first query. */
+  private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
+
+  /** A child session of `parent` (shared SparkContext and cache, its own
+    * SQL conf, temp views and functions) for builders that scope confs by
+    * construction, minted without artifact isolation. Runtime `conf.set`
+    * values do not propagate to a child; `carry` names the ones to copy.
+    * Every child session comes from here (SessionGuardSpec). */
+  def childSession(parent: SparkSession, carry: String*): SparkSession = {
+    val child = parent.newSession()
+    child.conf.set(ArtifactIsolation, "false")
+    carry.foreach(k => parent.conf.getOption(k).foreach(child.conf.set(k, _)))
+    child
   }
 
-  /** Run a foreachBatch-style streaming execution under the same shrunken
-    * state/shuffle partition count as [[runToMemory]] (round 17, guide §2
-    * fixed-cost removal): the five explicit-sink pipelines (observe, cdc,
-    * quality filter, ivf ingest, dim refresh) ran their micro-batches at
-    * the session's 32 shuffle partitions, so every stateful/aggregating
-    * batch stage paid 32 state-store instances + 32-task scheduling for
-    * kilobytes of rows. A direct measurement of the stall:
-    * 3.09 s at 32 partitions vs 1.69 s at 4 on the identical 3-batch
-    * stateful stream (~0.7 s/task of zero-CPU wait in every 32-task
-    * stateful stage). Same dial, same restoration discipline, and the
-    * same scale story as runToMemory: a real deployment sizes the count
-    * UP with state volume — it tracks state size, not executor count.
-    * Results are partition-count-independent (every per-batch sum these
-    * pipelines run is exact-decimal or integer). */
-  private def withBatchParts[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.get(key)
-    spark.conf.set(key, "4")
-    try body finally spark.conf.set(key, prior)
+  /** Start a streaming query and run it to termination; every pipeline
+    * starts here (SessionGuardSpec). `start()` runs the query in a clone
+    * that copies the session's conf at that moment, so two settings are
+    * in place around the run, then restored for the post-stream work:
+    *  - artifact isolation off ([[ArtifactIsolation]]);
+    *  - 4 shuffle (= state) partitions, which foreachBatch bodies that
+    *    query `spark` share. A stateful operator materializes one state
+    *    store per shuffle partition per run: 3.09 s at 32 partitions vs
+    *    1.69 s at 4 on the identical 3-batch stateful stream, and 8 → 4
+    *    took another ~15% off the per-pipeline fixed cost. The count is
+    *    pinned into the checkpoint at the first batch, so a deployment
+    *    sizes it with state volume, not executor count. Results are
+    *    partition-count-independent (every per-batch sum is exact). */
+  private def runStream(spark: SparkSession)(
+      writer: DataStreamWriter[_]): StreamingQuery = {
+    val scoped = Seq("spark.sql.shuffle.partitions" -> "4", ArtifactIsolation -> "false")
+    val prior = scoped.map { case (k, _) => k -> spark.conf.get(k) }
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val q = writer.start()
+      q.awaitTermination()
+      q
+    } finally prior.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  /** Run a streaming DF to completion into a memory sink, return the table.
+    *
+    * Under TimeMode.ProcessingTime (state TTL / proc-time timers) the
+    * engine never goes idle — a timer-driven batch is always pending, so
+    * an AvailableNow run never reaches its end marker and
+    * processAllAvailable never returns (both verified hanging). The one
+    * trigger that provably terminates there is Trigger.Once: ALL
+    * available data in one batch, then stop (`singleBatch`). */
+  def runToMemory(spark: SparkSession, df: DataFrame, name: String,
+      mode: OutputMode, singleBatch: Boolean = false): DataFrame = {
+    runStream(spark)(df.writeStream.outputMode(mode)
+      .format("memory").queryName(name)
+      .trigger(if (singleBatch) Trigger.Once() else Trigger.AvailableNow()))
+    spark.table(name)
   }
 
   /** Tumbling 1-day window counts per event type (DStream
@@ -830,20 +838,16 @@ object StreamingPipelines {
     writeIdSplitBatches(spark, docs, s"$io/in", 3)
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    withBatchParts(spark) {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$io/in/b*.parquet")
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.queries.CurationQueries.qcScore(batch, w)
-            .write.mode("append").parquet(s"$io/scored")
-        }
-        .option("checkpointLocation", s"$io/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runStream(spark)(spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$io/in/b*.parquet")
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        graft.queries.CurationQueries.qcScore(batch, w)
+          .write.mode("append").parquet(s"$io/scored")
+      }
+      .option("checkpointLocation", s"$io/ckpt")
+      .trigger(Trigger.AvailableNow()))
     val streamed = spark.read.parquet(s"$io/scored")
     // batch twin scores from the trained feature relation (round 17):
     // identical (doc_id, m, keep) rows to qcScore(docs, w) — feats IS the
@@ -902,27 +906,24 @@ object StreamingPipelines {
       StructField("seq", LongType), StructField("op", StringType)))
     var cur = s"$io/v0"
     var ver = 0
-    withBatchParts(spark) {
-      val q = spark.readStream.schema(chSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$io/changes/c*.parquet")
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val merged = spark.read.parquet(cur).unionByName(batch)
-            .groupBy("key")
-            .agg(max_by(struct(col("price"), col("op")), col("seq")).as("b"),
-              max("seq").as("seq"))
-            .select(col("key"), col("b.price").as("price"), col("seq"),
-              col("b.op").as("op"))
-          ver += 1
-          val next = s"$io/v$ver"
-          merged.write.parquet(next)
-          cur = next
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    runStream(spark)(spark.readStream.schema(chSchema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$io/changes/c*.parquet")
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val merged = spark.read.parquet(cur).unionByName(batch)
+          .groupBy("key")
+          .agg(max_by(struct(col("price"), col("op")), col("seq")).as("b"),
+            max("seq").as("seq"))
+          .select(col("key"), col("b.price").as("price"), col("seq"),
+            col("b.op").as("op"))
+        ver += 1
+        val next = s"$io/v$ver"
+        merged.write.parquet(next)
+        cur = next
+        ()
+      }
+      .trigger(Trigger.AvailableNow()))
     spark.read.parquet(cur).agg(
       count(when(col("op") =!= "D", lit(1))).as("n_rows"),
       count(when(col("op") === "U" && col("seq") === 1, lit(1))).as("n_updated"),
@@ -962,23 +963,20 @@ object StreamingPipelines {
     val acc = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
     val schema = StructType(Seq(StructField("event_id", LongType),
       StructField("event_type", StringType)))
-    withBatchParts(spark) {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$io/in/b*.parquet")
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val seen = spark.read.parquet(s"$io/dim")
-            .filter(col("residue") >= 0).count()
-          val res = batch.select(pmod(col("event_id"), lit(3)).as("r"))
-            .head().getLong(0)
-          acc.add((batch.count(), seen))
-          Seq(res).toDF("residue").write.mode("append").parquet(s"$io/dim")
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    runStream(spark)(spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$io/in/b*.parquet")
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val seen = spark.read.parquet(s"$io/dim")
+          .filter(col("residue") >= 0).count()
+        val res = batch.select(pmod(col("event_id"), lit(3)).as("r"))
+          .head().getLong(0)
+        acc.add((batch.count(), seen))
+        Seq(res).toDF("residue").write.mode("append").parquet(s"$io/dim")
+        ()
+      }
+      .trigger(Trigger.AvailableNow()))
     import scala.jdk.CollectionConverters._
     acc.asScala.toSeq.toDF("n_events", "n_seen")
       .agg(count(lit(1)).as("n_batches"),
@@ -1030,29 +1028,26 @@ object StreamingPipelines {
         (1 to 8).map(i => StructField(s"x$i", DoubleType)))
     var cur = s"$io/v0"
     var ver = 0
-    withBatchParts(spark) {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$io/arrivals/b*.parquet")
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val assigned = VectorQueries.ivfIncrAssign(batch, cent)
-            .groupBy(col("asg").as("cid")).agg(count(lit(1)).as("nd"))
-          val merged = spark.read.parquet(cur)
-            .join(assigned, Seq("cid"), "full_outer")
-            .select(col("cid"),
-              coalesce(col("n_base"), lit(0L)).as("n_base"),
-              (coalesce(col("n_delta"), lit(0L)) + coalesce(col("nd"), lit(0L)))
-                .as("n_delta"))
-          ver += 1
-          val next = s"$io/v$ver"
-          merged.write.parquet(next)
-          cur = next // pointer swap AFTER the full write: readers of the
-          ()         // previous version never see a torn snapshot
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    runStream(spark)(spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$io/arrivals/b*.parquet")
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val assigned = VectorQueries.ivfIncrAssign(batch, cent)
+          .groupBy(col("asg").as("cid")).agg(count(lit(1)).as("nd"))
+        val merged = spark.read.parquet(cur)
+          .join(assigned, Seq("cid"), "full_outer")
+          .select(col("cid"),
+            coalesce(col("n_base"), lit(0L)).as("n_base"),
+            (coalesce(col("n_delta"), lit(0L)) + coalesce(col("nd"), lit(0L)))
+              .as("n_delta"))
+        ver += 1
+        val next = s"$io/v$ver"
+        merged.write.parquet(next)
+        cur = next // pointer swap AFTER the full write: readers of the
+        ()         // previous version never see a torn snapshot
+      }
+      .trigger(Trigger.AvailableNow()))
     spark.read.parquet(cur)
       .select(col("cid"), col("n_base"), col("n_delta"),
         (col("n_base") + col("n_delta")).as("n_total"))
@@ -1138,7 +1133,7 @@ object StreamingPipelines {
 
   def foreachBatchCounts(spark: SparkSession, sfDir: String): DataFrame = {
     val acc = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long)]()
-    val q = eventStream(spark, sfDir)
+    runStream(spark)(eventStream(spark, sfDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.groupBy("event_type").agg(count(lit(1)).as("n"))
@@ -1146,8 +1141,7 @@ object StreamingPipelines {
           .foreach(r => acc.add((batchId, r.getString(0), r.getLong(1))))
         ()
       }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+      .trigger(Trigger.AvailableNow()))
     import scala.jdk.CollectionConverters._
     import spark.implicits._
     acc.asScala.toSeq.toDF("batch_id", "event_type", "n")
@@ -1182,24 +1176,20 @@ object StreamingPipelines {
     val finalCounts =
       new java.util.concurrent.atomic.AtomicReference[Array[(String, Long)]](
         Array.empty)
-    val q = withBatchParts(spark) {
-      val started = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$io/in/b*.parquet")
-        .observe("qa", count(lit(1)).as("rows"),
-          sum(col("value").cast("decimal(30,12)")).as("val_sum"))
-        .groupBy("event_type").agg(count(lit(1)).as("cnt"))
-        .writeStream.outputMode(OutputMode.Complete())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // complete mode: each batch carries the FULL state; keep the last
-          finalCounts.set(batch.collect()
-            .map(r => (r.getString(0), r.getLong(1))))
-          ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      started.awaitTermination()
-      started
-    }
+    val q = runStream(spark)(spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$io/in/b*.parquet")
+      .observe("qa", count(lit(1)).as("rows"),
+        sum(col("value").cast("decimal(30,12)")).as("val_sum"))
+      .groupBy("event_type").agg(count(lit(1)).as("cnt"))
+      .writeStream.outputMode(OutputMode.Complete())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        // complete mode: each batch carries the FULL state; keep the last
+        finalCounts.set(batch.collect()
+          .map(r => (r.getString(0), r.getLong(1))))
+        ()
+      }
+      .trigger(Trigger.AvailableNow()))
     val qa = q.recentProgress.toSeq
       .flatMap(p => Option(p.observedMetrics.get("qa")))
     val nonEmpty = qa.filter(_.getAs[Long]("rows") > 0)

@@ -1,0 +1,42 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Every streaming query starts, and every child session is minted, in
+  * `StreamingPipelines` (`runStream`, `childSession`), which turn
+  * artifact isolation off. A builder that starts its own stream or calls
+  * `newSession()` would recompile its generated classes on every run
+  * (CodegenReuseSpec). */
+class SessionGuardSpec extends AnyFunSuite {
+  private val helperFile = "StreamingPipelines.scala"
+
+  private def sources(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) sources(f)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Nil
+    }
+
+  // whitespace-free, so a call split over lines still matches
+  private def text(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").replaceAll("\\s", "")
+
+  private def count(s: String, p: String): Int =
+    s.split(java.util.regex.Pattern.quote(p), -1).length - 1
+
+  test("no stream start or newSession() outside the session helpers") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root (no ${root.getAbsolutePath})")
+    val (helper, rest) = sources(root).partition(_.getName == helperFile)
+    assert(helper.size == 1 && rest.size > 10)
+    val hits = for {
+      f <- rest
+      p <- Seq(".newSession()", ".writeStream") if text(f).contains(p)
+    } yield s"${f.getPath}: $p"
+    assert(hits.isEmpty, hits.mkString("\n"))
+    // inside the helper file, one call site each: runStream and childSession
+    val h = text(helper.head)
+    assert(count(h, ".start()") === 1, s"$helperFile: a stream started outside runStream")
+    assert(count(h, ".newSession()") === 1, s"$helperFile: newSession() outside childSession")
+  }
+}
