@@ -23,4 +23,13 @@ object GraftIO {
     val base = if (t == null || t.isEmpty) "/tmp" else t.stripSuffix("/")
     s"$base/graft_io"
   }
+
+  /** `root/name`, emptied: a builder's working directory, reset before
+    * each run so no file of an earlier run is read back. */
+  def fresh(spark: org.apache.spark.sql.SparkSession, name: String): String = {
+    val dir = s"$root/$name"
+    val path = new org.apache.hadoop.fs.Path(dir)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+    dir
+  }
 }

@@ -25,6 +25,16 @@ object SourceQueries {
   private def ioDir(name: String): String =
     Paths.get(sys.props("java.io.tmpdir"), "graft_io", name).toString
 
+  /** A child session with the graftmem tables as catalog `graftmem_cat`,
+    * so the row-level SQL and its temp views stay off the caller's
+    * session. `GraftMemStore` is JVM-wide: the child sees the tables the
+    * DataFrame writer committed. */
+  private def memCatalogSession(s: SparkSession): SparkSession = {
+    val child = childSession(s)
+    child.conf.set("spark.sql.catalog.graftmem_cat", "graft.sources.GraftMemCatalog")
+    child
+  }
+
   val queries: Map[String, Q] = Map(
 
     // csv scan: nation → csv (header) → read with explicit schema → agg
@@ -359,11 +369,10 @@ object SourceQueries {
       o.filter(col("o_orderkey") % 5 === 0)
         .write.format("graftmem").option("table", "orders_del")
         .mode("overwrite").save()
-      s.conf.set("spark.sql.catalog.graftmem_cat",
-        "graft.sources.GraftMemCatalog")
-      s.sql("""DELETE FROM graftmem_cat.orders_del
+      val cat = memCatalogSession(s)
+      cat.sql("""DELETE FROM graftmem_cat.orders_del
                WHERE o_orderstatus = 'F' AND o_totalprice < 100000.0""")
-      s.sql("""SELECT o_orderstatus, count(*) AS n,
+      cat.sql("""SELECT o_orderstatus, count(*) AS n,
                  round(sum(CAST(o_totalprice AS DECIMAL(30,12))), 4) AS sum_price
                FROM graftmem_cat.orders_del
                GROUP BY o_orderstatus ORDER BY o_orderstatus""")
@@ -413,25 +422,24 @@ object SourceQueries {
       o.filter(col("o_orderkey") % 7 === 0)
         .write.format("graftmem").option("table", "orders_upd")
         .mode("overwrite").save()
-      s.conf.set("spark.sql.catalog.graftmem_cat",
-        "graft.sources.GraftMemCatalog")
-      s.sql("""UPDATE graftmem_cat.orders_upd
+      val cat = memCatalogSession(s)
+      cat.sql("""UPDATE graftmem_cat.orders_upd
                SET o_totalprice = o_totalprice * 0.9
                WHERE o_orderstatus = 'F'""")
       // %14==0 keys exist in the table (⊂ %7==0 → update/delete
       // clauses); %14==1 keys cannot (14k+1 ≢ 0 mod 7 → insert clause)
-      Tables.orders(s, d)
+      Tables.orders(cat, d)
         .filter(col("o_orderkey") % 14 === 0 || col("o_orderkey") % 14 === 1)
         .select(col("o_orderkey"),
           (col("o_totalprice") + 5.0).as("new_price"))
         .createOrReplaceTempView("orders_chg")
-      s.sql("""MERGE INTO graftmem_cat.orders_upd t
+      cat.sql("""MERGE INTO graftmem_cat.orders_upd t
                USING orders_chg c ON t.o_orderkey = c.o_orderkey
                WHEN MATCHED AND t.o_orderstatus = 'O' THEN DELETE
                WHEN MATCHED THEN UPDATE SET o_totalprice = c.new_price
                WHEN NOT MATCHED THEN INSERT (o_orderkey, o_orderstatus,
                  o_totalprice) VALUES (c.o_orderkey, 'M', c.new_price)""")
-      s.sql("""SELECT o_orderstatus, count(*) AS n,
+      cat.sql("""SELECT o_orderstatus, count(*) AS n,
                  round(sum(CAST(o_totalprice AS DECIMAL(30,12))), 4) AS sum_price
                FROM graftmem_cat.orders_upd
                GROUP BY o_orderstatus ORDER BY o_orderstatus""")

@@ -246,15 +246,9 @@ object WarehouseQueries {
         .select("l_orderkey", "p8", "s8", "bucket")
         .unionAll(delta.select("l_orderkey", "p8", "s8", "bucket"))
         .localCheckpoint()
-      val prior = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      try {
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        rewritten.hint("rebalance", col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(basePath)
-      } finally prior match {
-        case Some(p) => s.conf.set("spark.sql.sources.partitionOverwriteMode", p)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      rewritten.hint("rebalance", col("bucket"))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket").parquet(basePath)
       val after = s.read.parquet(basePath)
         .select(col("l_orderkey"), col("p8"), col("s8"),
           col("bucket").cast("long").as("bucket"),
@@ -376,10 +370,7 @@ object WarehouseQueries {
     // result provably equals the full-scan filter (the oracle), and the
     // pruning verdict (files_scanned < files_total) rides in-plan.
     "q_manifest_prune" -> ((s, d) => {
-      val base = graft.GraftIO.root + "/manifest"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+      val base = graft.GraftIO.fresh(s, "manifest")
       // range layout: repartitionByRange clusters each file on the sort
       // key — the write-time investment zone maps monetize at read time
       Tables.orders(s, d)
@@ -432,10 +423,7 @@ object WarehouseQueries {
     // present key, so a missing output row is impossible unless the
     // index build itself is wrong — which the equality catches).
     "q_bloom_skip_index" -> ((s, d) => {
-      val base = graft.GraftIO.root + "/bloom_skip"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+      val base = graft.GraftIO.fresh(s, "bloom_skip")
       Tables.orders(s, d)
         .select("o_orderkey", "o_totalprice")
         .repartition(8, col("o_orderkey"))
@@ -485,10 +473,7 @@ object WarehouseQueries {
     // small by design (q_compaction is the eventual rewrite that folds
     // them in, q_vacuum the cleanup — this row is the read-path merge).
     "q_deletion_vectors" -> ((s, d) => {
-      val base = graft.GraftIO.root + "/delvec"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+      val base = graft.GraftIO.fresh(s, "delvec")
       Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .repartition(8, col("o_orderkey"))

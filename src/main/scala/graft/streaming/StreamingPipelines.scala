@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery, Trigger}
@@ -31,9 +31,23 @@ import graft.functions._
   * is ~640 MB and the memory store completes — while remaining a
   * 50× over-provision for a 5-value keyspace. */
 object CmsStateSizing {
+  import org.apache.spark.util.sketch.CountMinSketch
+
   val Eps = 0.05
   val Conf = 0.999
   val Seed = 42
+
+  /** One user's state step, shared by both pipelines: fold a batch's
+    * event types into the serialized CMS (a fresh one when `prior` is
+    * empty) and return the new bytes with the click estimate. */
+  def fold(prior: Option[Array[Byte]], eventTypes: Iterator[String]): (Array[Byte], Long) = {
+    val cms = prior.map(b => CountMinSketch.readFrom(b))
+      .getOrElse(CountMinSketch.create(Eps, Conf, Seed))
+    eventTypes.foreach(cms.addString)
+    val out = new java.io.ByteArrayOutputStream()
+    cms.writeTo(out)
+    (out.toByteArray, cms.estimateCount("click"))
+  }
 }
 
 /** StatefulProcessor keeping one serialized CMS per user key: the
@@ -46,7 +60,6 @@ class CmsStatefulProcessor(
     extends org.apache.spark.sql.streaming.StatefulProcessor[
       Long, (Long, String), (Long, Long)] {
   import org.apache.spark.sql.streaming.{OutputMode => OM, TimeMode, TimerValues, ValueState}
-  import org.apache.spark.util.sketch.CountMinSketch
 
   @transient private var cmsBytes: ValueState[Array[Byte]] = _
 
@@ -56,15 +69,10 @@ class CmsStatefulProcessor(
 
   override def handleInputRows(key: Long, rows: Iterator[(Long, String)],
       timers: TimerValues): Iterator[(Long, Long)] = {
-    val cms =
-      if (cmsBytes.exists()) CountMinSketch.readFrom(cmsBytes.get())
-      else CountMinSketch.create(CmsStateSizing.Eps, CmsStateSizing.Conf,
-        CmsStateSizing.Seed)
-    rows.foreach { case (_, et) => cms.addString(et) }
-    val out = new java.io.ByteArrayOutputStream()
-    cms.writeTo(out)
-    cmsBytes.update(out.toByteArray)
-    Iterator.single((key, cms.estimateCount("click")))
+    val (bytes, est) = CmsStateSizing.fold(
+      if (cmsBytes.exists()) Some(cmsBytes.get()) else None, rows.map(_._2))
+    cmsBytes.update(bytes)
+    Iterator.single((key, est))
   }
 }
 
@@ -202,29 +210,51 @@ object StreamingPipelines {
     child
   }
 
+  /** Settings of the transformWithState pipelines: the RocksDB state store
+    * (the HDFS default rejects multi-column-family state) with changelog
+    * checkpointing, which commits per-batch deltas, not full snapshots. */
+  private val RocksDbState = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+
+  /** Serializes the conf window of [[runStream]] across the JVM. */
+  private val StartLock = new Object
+
   /** Start a streaming query and run it to termination; every pipeline
-    * starts here (SessionGuardSpec). `start()` runs the query in a clone
-    * that copies the session's conf at that moment, so two settings are
-    * in place around the run, then restored for the post-stream work:
+    * starts here (SessionGuardSpec), and this is the one place its
+    * settings are scoped. `start()` runs the query in a clone of the
+    * session (the StreamExecution constructor calls `cloneSession()`),
+    * so the settings are set only across `start()`, under a JVM-wide
+    * lock, and then each key gets back its prior explicit value or is
+    * unset: pipelines started concurrently on one session never see each
+    * other's settings. The stream's clone keeps:
     *  - artifact isolation off ([[ArtifactIsolation]]);
-    *  - 4 shuffle (= state) partitions, which foreachBatch bodies that
-    *    query `spark` share. A stateful operator materializes one state
-    *    store per shuffle partition per run: 3.09 s at 32 partitions vs
-    *    1.69 s at 4 on the identical 3-batch stateful stream, and 8 → 4
-    *    took another ~15% off the per-pipeline fixed cost. The count is
-    *    pinned into the checkpoint at the first batch, so a deployment
-    *    sizes it with state volume, not executor count. Results are
-    *    partition-count-independent (every per-batch sum is exact). */
-  private def runStream(spark: SparkSession)(
+    *  - 4 shuffle (= state) partitions. A stateful operator materializes
+    *    one state store per shuffle partition per run: 3.09 s at 32
+    *    partitions vs 1.69 s at 4 on the identical 3-batch stateful
+    *    stream. The count is pinned into the checkpoint at the first
+    *    batch; results are partition-count-independent. foreachBatch
+    *    bodies read through `batch.sparkSession`, the clone;
+    *  - the pipeline's own `confs` (e.g. [[RocksDbState]]). */
+  private def runStream(spark: SparkSession, confs: (String, String)*)(
       writer: DataStreamWriter[_]): StreamingQuery = {
-    val scoped = Seq("spark.sql.shuffle.partitions" -> "4", ArtifactIsolation -> "false")
-    val prior = scoped.map { case (k, _) => k -> spark.conf.get(k) }
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val q = writer.start()
-      q.awaitTermination()
-      q
-    } finally prior.foreach { case (k, v) => spark.conf.set(k, v) }
+    val scoped = Seq("spark.sql.shuffle.partitions" -> "4", ArtifactIsolation -> "false") ++ confs
+    val q = StartLock.synchronized {
+      // getAll holds explicit values only (get would return defaults)
+      val prior = spark.conf.getAll
+      try {
+        scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+        writer.start()
+      } finally scoped.foreach { case (k, _) =>
+        prior.get(k) match {
+          case Some(v) => spark.conf.set(k, v)
+          case None => spark.conf.unset(k)
+        }
+      }
+    }
+    q.awaitTermination()
+    q
   }
 
   /** Run a streaming DF to completion into a memory sink, return the table.
@@ -236,12 +266,21 @@ object StreamingPipelines {
     * trigger that provably terminates there is Trigger.Once: ALL
     * available data in one batch, then stop (`singleBatch`). */
   def runToMemory(spark: SparkSession, df: DataFrame, name: String,
-      mode: OutputMode, singleBatch: Boolean = false): DataFrame = {
-    runStream(spark)(df.writeStream.outputMode(mode)
+      mode: OutputMode, singleBatch: Boolean = false,
+      confs: Seq[(String, String)] = Nil): DataFrame = {
+    runStream(spark, confs: _*)(df.writeStream.outputMode(mode)
       .format("memory").queryName(name)
       .trigger(if (singleBatch) Trigger.Once() else Trigger.AvailableNow()))
     spark.table(name)
   }
+
+  /** The document replay batches' schema. */
+  private val DocSchema = "doc_id LONG, text STRING"
+
+  /** Replay of single-file parquet batches (written by [[writeSplitFiles]]),
+    * one file per micro-batch; `schema` is a DDL string. */
+  private def replay(spark: SparkSession, schema: String, glob: String): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(glob)
 
   /** Tumbling 1-day window counts per event type (DStream
     * `reduceByKeyAndWindow(w, w)` twin). */
@@ -410,23 +449,28 @@ object StreamingPipelines {
     * each match in the batch where both sides are present, so the
     * replayed-file result equals the batch join — which is the DuckDB
     * oracle (both engines read the same ns parquet truncated to µs). */
-  def streamStreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val clicks = eventStream(spark, sfDir)
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = eventStream(spark, sfDir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = clicks.join(purchases,
-      col("c_user") === col("p_user") &&
-        col("p_ts") >= col("c_ts") &&
-        col("p_ts") <= col("c_ts") + expr("INTERVAL 2 HOURS"))
-    runToMemory(spark, joined, "stream_stream_join", OutputMode.Append())
+  def streamStreamJoin(spark: SparkSession, sfDir: String): DataFrame =
+    runToMemory(spark, clickPurchaseJoin(spark, sfDir, "inner"), "stream_stream_join",
+      OutputMode.Append())
       .groupBy(col("c_user").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy("user_id")
+
+  /** Clicks (`c_user`, `c_ts`) joined to the same user's purchases
+    * (`p_user`, `p_ts`) within [click, click + 2h], both sides
+    * watermarked 1h: the attribution join of [[streamStreamJoin]] and
+    * [[streamOuterJoin]]. */
+  private def clickPurchaseJoin(spark: SparkSession, sfDir: String,
+      joinType: String): DataFrame = {
+    def side(eventType: String, p: String) = eventStream(spark, sfDir)
+      .filter(col("event_type") === eventType)
+      .select(col("user_id").as(s"${p}_user"), col("ts").as(s"${p}_ts"))
+      .withWatermark(s"${p}_ts", "1 hour")
+    side("click", "c").join(side("purchase", "p"),
+      col("c_user") === col("p_user") &&
+        col("p_ts") >= col("c_ts") &&
+        col("p_ts") <= col("c_ts") + expr("INTERVAL 2 HOURS"),
+      joinType)
   }
 
   /** LEFT-OUTER stream-stream join: like [[streamStreamJoin]] but
@@ -440,19 +484,7 @@ object StreamingPipelines {
     * matches or its null row. The oracle is the batch left join under
     * the same cutoff. */
   def streamOuterJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val clicks = eventStream(spark, sfDir)
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = eventStream(spark, sfDir)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = clicks.join(purchases,
-      col("c_user") === col("p_user") &&
-        col("p_ts") >= col("c_ts") &&
-        col("p_ts") <= col("c_ts") + expr("INTERVAL 2 HOURS"),
-      "left_outer")
+    val joined = clickPurchaseJoin(spark, sfDir, "left_outer")
     val cutoff = graft.Tables.events(spark, sfDir)
       .agg((max(col("ts")) - expr("INTERVAL 4 HOURS")).as("cut"))
     runToMemory(spark, joined, "stream_outer_join", OutputMode.Append())
@@ -470,22 +502,12 @@ object StreamingPipelines {
     * across micro-batches; final answer = per-user click estimate. */
   def cmsStatefulStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.util.sketch.CountMinSketch
-    import java.io.ByteArrayOutputStream
-
     val updateFn = (userId: Long, rows: Iterator[(Long, String)],
         state: GroupState[Array[Byte]]) => {
-      val cms =
-        if (state.exists) CountMinSketch.readFrom(state.get)
-        else CountMinSketch.create(CmsStateSizing.Eps, CmsStateSizing.Conf,
-          CmsStateSizing.Seed)
-      rows.foreach { case (_, et) => cms.addString(et) }
-      val out = new ByteArrayOutputStream()
-      cms.writeTo(out)
-      state.update(out.toByteArray)
-      (userId, cms.estimateCount("click"))
+      val (bytes, est) = CmsStateSizing.fold(state.getOption, rows.map(_._2))
+      state.update(bytes)
+      (userId, est)
     }
-
     val est = eventStream(spark, sfDir)
       .select(col("user_id"), col("event_type"))
       .as[(Long, String)]
@@ -508,36 +530,23 @@ object StreamingPipelines {
         org.apache.spark.sql.streaming.TTLConfig.NONE,
       sink: String = "stream_tws"): DataFrame = {
     import spark.implicits._
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // changelog checkpointing ships per-batch deltas instead of full
-    // RocksDB snapshots — the production setting for low-latency commits
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-      ".changelogCheckpointing.enabled", "true")
-    try {
-      // state TTL needs the processing-time clock; the TTL-free twin
-      // keeps TimeMode.None (no clock dependency at all)
-      val usesTtl = ttl != org.apache.spark.sql.streaming.TTLConfig.NONE
-      val timeMode =
-        if (!usesTtl) org.apache.spark.sql.streaming.TimeMode.None()
-        else org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-      val est = eventStream(spark, sfDir)
-        .select(col("user_id"), col("event_type"))
-        .as[(Long, String)]
-        .groupByKey(_._1)
-        .transformWithState(new CmsStatefulProcessor(ttl), timeMode,
-          OutputMode.Update())
-        .toDF("user_id", "click_est")
-      runToMemory(spark, est, sink, OutputMode.Update(), singleBatch = usesTtl)
-        .groupBy("user_id").agg(max("click_est").as("click_est"))
-        .orderBy("user_id")
-    } finally {
-      prior match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    // state TTL needs the processing-time clock; the TTL-free twin
+    // keeps TimeMode.None (no clock dependency at all)
+    val usesTtl = ttl != org.apache.spark.sql.streaming.TTLConfig.NONE
+    val timeMode =
+      if (!usesTtl) org.apache.spark.sql.streaming.TimeMode.None()
+      else org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
+    val est = eventStream(spark, sfDir)
+      .select(col("user_id"), col("event_type"))
+      .as[(Long, String)]
+      .groupByKey(_._1)
+      .transformWithState(new CmsStatefulProcessor(ttl), timeMode,
+        OutputMode.Update())
+      .toDF("user_id", "click_est")
+    runToMemory(spark, est, sink, OutputMode.Update(), singleBatch = usesTtl,
+      confs = RocksDbState)
+      .groupBy("user_id").agg(max("click_est").as("click_est"))
+      .orderBy("user_id")
   }
 
   /** Timer-driven session counts via [[SessionTimerProcessor]] — the
@@ -549,35 +558,24 @@ object StreamingPipelines {
     * [[sessionCounts]]'s by construction and shares its oracle. */
   def sessionTimerCounts(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-      ".changelogCheckpointing.enabled", "true")
-    try {
-      val sessions = eventStream(spark, sfDir)
-        .withWatermark("ts", "1 hour")
-        .select(col("user_id"), expr("unix_millis(ts)").as("ts_ms"))
-        .as[(Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new SessionTimerProcessor(6L * 3600 * 1000),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(),
-          OutputMode.Append())
-        .toDF("user_id", "n_events", "last_ts_ms")
-      val cutoff = graft.Tables.events(spark, sfDir)
-        .agg((expr("unix_millis(max(ts))") - lit(8L * 3600 * 1000)).as("cut_ms"))
-      runToMemory(spark, sessions, "stream_timer_session", OutputMode.Append())
-        .crossJoin(broadcast(cutoff))
-        .filter(col("last_ts_ms") <= col("cut_ms"))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
-        .orderBy("user_id")
-    } finally {
-      prior match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    val sessions = eventStream(spark, sfDir)
+      .withWatermark("ts", "1 hour")
+      .select(col("user_id"), expr("unix_millis(ts)").as("ts_ms"))
+      .as[(Long, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new SessionTimerProcessor(6L * 3600 * 1000),
+        org.apache.spark.sql.streaming.TimeMode.EventTime(),
+        OutputMode.Append())
+      .toDF("user_id", "n_events", "last_ts_ms")
+    val cutoff = graft.Tables.events(spark, sfDir)
+      .agg((expr("unix_millis(max(ts))") - lit(8L * 3600 * 1000)).as("cut_ms"))
+    runToMemory(spark, sessions, "stream_timer_session", OutputMode.Append(),
+      confs = RocksDbState)
+      .crossJoin(broadcast(cutoff))
+      .filter(col("last_ts_ms") <= col("cut_ms"))
+      .groupBy("user_id")
+      .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
+      .orderBy("user_id")
   }
 
   /** Write a relation as `n` single-file parquet replay batches
@@ -596,7 +594,7 @@ object StreamingPipelines {
     * the coalesce(1) form; no consumer is row-order-sensitive (state
     * folds sort their group slice; everything else is additive). */
   private def writeSplitFiles(spark: SparkSession, df: DataFrame,
-      bucket: org.apache.spark.sql.Column, dir: String, n: Int,
+      bucket: Column, dir: String, n: Int,
       prefix: String = "b", idxOffset: Int = 0): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
@@ -624,6 +622,27 @@ object StreamingPipelines {
       dir: String, n: Int): Unit =
     writeSplitFiles(spark, df, pmod(col("doc_id"), lit(n)), dir, n)
 
+  /** Fold a replayed stream into versioned parquet snapshots: from
+    * `io/v0`, each micro-batch writes `merge(current, batch)` as the next
+    * version `io/v1`, `io/v2`, … and only then moves the pointer, so a
+    * reader of the previous version never sees a torn snapshot. Returns
+    * the final version. */
+  private def foldVersions(spark: SparkSession, stream: DataFrame, io: String)(
+      merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    var cur = s"$io/v0"
+    var ver = 0
+    runStream(spark)(stream.writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        ver += 1
+        val next = s"$io/v$ver"
+        merge(batch.sparkSession.read.parquet(cur), batch).write.parquet(next)
+        cur = next
+        ()
+      }
+      .trigger(Trigger.AvailableNow()))
+    spark.read.parquet(cur)
+  }
+
   /** Per-row MinHash signature hash (k=16 coordinates over 3-gram
     * hashes), computed WITHOUT any shuffle: the token-mode
     * [[graft.functions.MinHashSig]] derives the gram hashes (the exact
@@ -637,7 +656,7 @@ object StreamingPipelines {
     * store. Identical distinct-gram SETS — exactly Jaccard 1.0 —
     * give identical signatures by construction, so the gate can never
     * miss a 1.0 pair. */
-  private[graft] def minhashSigHash(text: org.apache.spark.sql.Column) =
+  private[graft] def minhashSigHash(text: Column) =
     graft.functions.minhash_sig(tokens(text))
 
   /**
@@ -661,66 +680,59 @@ object StreamingPipelines {
    */
   def streamMinhashDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val io = graft.GraftIO.root + "/stream_minhash"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(io), true)
     val planted = graft.queries.TextQueries.plantedDupDocs.toDF("doc_id", "text")
     val docs = graft.Tables.documents(spark, sfDir).select("doc_id", "text")
       .unionAll(planted)
     // planted ids mod 3 = {1, 2, 0, 1, 2}: every duplicate group spans
-    // ≥2 batches, so the gate exercises real cross-batch state
+    // ≥2 batches, so the gate exercises real cross-batch state.
+    // dupGroups, members and postings are localCheckpointed: each feeds
+    // two+ joins, and without the cut every consumer re-derives its
+    // whole subtree — measured 57→5 s on the candidate join at sf0.1
+    val dupGroups = sigDupGroups(spark, docs, "stream_minhash")(minhashSigHash)
+    val sigs = docs.select(col("doc_id"), minhashSigHash(col("text")).as("sig"))
+    val members = sigs.join(dupGroups.select("sig"), "sig").localCheckpoint()
+    val cand = members.select(col("sig"), col("doc_id").as("id_a"))
+      .join(members.select(col("sig"), col("doc_id").as("id_b")), "sig")
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
+    // verification postings from the MAINTAINED index (round 17 — the
+    // q_containment_dedup reuse pattern): planted ids live in a
+    // disjoint id space, so distinct(grams(docs ∪ planted)) ≡
+    // postingsShared ∪ distinct(grams(planted)) — identical rows
+    // without re-shingling the corpus
+    val postings = graft.queries.TextQueries.postingsShared(spark, sfDir)
+      .unionAll(graft.queries.TextQueries.gramHashPostings(planted.toDF(
+        "doc_id", "text")).distinct())
+      .localCheckpoint()
+    graft.queries.TextQueries.verifyJaccard(cand, postings)
+      .filter(col("jaccard") >= 1.0)
+      .orderBy("id_a", "id_b")
+  }
+
+  /** The ingest gate of [[streamMinhashDedup]] and [[streamPhashDedup]]:
+    * `docs` (doc_id, text) replayed as 3 id-split batches, keyed by the
+    * per-row signature `sig(text)` into [[SigDedupProcessor]] RocksDB
+    * state; returns the final (sig, keep_id, n) of every signature seen
+    * more than once, localCheckpointed. `name` is both the replay
+    * directory under [[graft.GraftIO.root]] and the memory sink. */
+  private def sigDupGroups(spark: SparkSession, docs: DataFrame, name: String)(
+      sig: Column => Column): DataFrame = {
+    import spark.implicits._
+    val io = graft.GraftIO.fresh(spark, name)
     writeIdSplitBatches(spark, docs, s"$io/in", 3)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-      ".changelogCheckpointing.enabled", "true")
-    try {
-      val gate = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$io/in/b*.parquet")
-        .select(minhashSigHash(col("text")).as("sig"), col("doc_id"))
-        .as[(Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new SigDedupProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-        .toDF("sig", "keep_id", "n")
-      val emissions = runToMemory(spark, gate, "stream_minhash", OutputMode.Update())
-      // final state per signature: min keeper / max count over emissions
-      // (localCheckpointed: dupGroups and postings each feed two+ joins,
-      // and without the cut every consumer re-derives its whole subtree
-      // — measured 57→5 s on the candidate join at sf0.1)
-      val dupGroups = emissions.groupBy("sig")
-        .agg(min("keep_id").as("keep_id"), max("n").as("n"))
-        .filter(col("n") > 1)
-        .localCheckpoint()
-      val sigs = docs.select(col("doc_id"), minhashSigHash(col("text")).as("sig"))
-      val members = sigs.join(dupGroups.select("sig"), "sig").localCheckpoint()
-      val cand = members.select(col("sig"), col("doc_id").as("id_a"))
-        .join(members.select(col("sig"), col("doc_id").as("id_b")), "sig")
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct()
-      // verification postings from the MAINTAINED index (round 17 — the
-      // q_containment_dedup reuse pattern): planted ids live in a
-      // disjoint id space, so distinct(grams(docs ∪ planted)) ≡
-      // postingsShared ∪ distinct(grams(planted)) — identical rows
-      // without re-shingling the corpus
-      val postings = graft.queries.TextQueries.postingsShared(spark, sfDir)
-        .unionAll(graft.queries.TextQueries.gramHashPostings(planted.toDF(
-          "doc_id", "text")).distinct())
-        .localCheckpoint()
-      graft.queries.TextQueries.verifyJaccard(cand, postings)
-        .filter(col("jaccard") >= 1.0)
-        .orderBy("id_a", "id_b")
-    } finally {
-      prior match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    val gate = replay(spark, DocSchema, s"$io/in/b*.parquet")
+      .select(sig(col("text")).as("sig"), col("doc_id"))
+      .as[(Long, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new SigDedupProcessor,
+        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+      .toDF("sig", "keep_id", "n")
+    // final state per signature: min keeper / max count over emissions
+    runToMemory(spark, gate, name, OutputMode.Update(), confs = RocksDbState)
+      .groupBy("sig")
+      .agg(min("keep_id").as("keep_id"), max("n").as("n"))
+      .filter(col("n") > 1)
+      .localCheckpoint()
   }
 
   /**
@@ -737,76 +749,40 @@ object StreamingPipelines {
    */
   def streamPhashDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val io = graft.GraftIO.root + "/stream_phash"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(io), true)
     val planted = graft.queries.MultimodalQueries.phPlanted.toDF("doc_id", "text")
     val media = graft.Tables.documents(spark, sfDir).select("doc_id", "text")
       .unionAll(planted)
     // planted ids mod 3 = {0, 1, 2}: the duplicate pair spans batches
     // 0 and 1 — real cross-batch state, not within-batch grouping
-    writeIdSplitBatches(spark, media, s"$io/in", 3)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val prior = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.stateStore.rocksdb" +
-      ".changelogCheckpointing.enabled", "true")
-    try {
-      val gate = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$io/in/b*.parquet")
-        .select(phash64(encode(col("text"), "UTF-8")).as("sig"), col("doc_id"))
-        .as[(Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new SigDedupProcessor,
-          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-        .toDF("sig", "keep_id", "n")
-      val emissions = runToMemory(spark, gate, "stream_phash", OutputMode.Update())
-      val groups = emissions.groupBy("sig")
-        .agg(min("keep_id").as("keep_id"), max("n").as("n"))
-        .filter(col("n") > 1)
-        .localCheckpoint()
-      val sigs = media
-        .select(col("doc_id"), phash64(encode(col("text"), "UTF-8")).as("sig"))
-        .localCheckpoint()
-      // flags, all derived in-plan: the planted pair hash-collides, its
-      // group surfaced through the STREAM state, the payloads are
-      // byte-distinct, and the pair genuinely spanned two batches
-      val plantedPair = sigs.filter(col("doc_id").isin(9200001L, 9200002L))
-        .agg((countDistinct("sig") === 1).as("planted_pair_found"))
-      val streamed = groups
-        .join(sigs.filter(col("doc_id") === 9200001L).select("sig"), "sig")
-        .agg((count(lit(1)) === 1).as("planted_group_streamed"))
-      val bytesDiffer = media.filter(col("doc_id").isin(9200001L, 9200002L))
-        .agg((countDistinct(md5(col("text"))) === 2).as("payloads_differ"))
-      val crossBatch = media.filter(col("doc_id").isin(9200001L, 9200002L))
-        .agg((countDistinct(col("doc_id") % 3) === 2).as("cross_batch"))
-      // gate count is scoped to the PLANTED sig so it is scale-invariant
-      // (round 10: the sf0.1 contract sweep found 9 ORGANIC exact-aHash
-      // groups — similar real texts legitimately collide, the dedup gate
-      // CORRECTLY groups them, but a global literal count can't ride the
-      // oracle across scales; organic-pair behavior is the batch
-      // q_phash_dedup row's job)
-      val plantedGroups = groups
-        .join(sigs.filter(col("doc_id") === 9200001L).select("sig"), "sig")
-        .agg(count(lit(1)).as("n_planted_groups"))
-      plantedGroups
-        .crossJoin(broadcast(plantedPair))
-        .crossJoin(broadcast(streamed))
-        .crossJoin(broadcast(bytesDiffer))
-        .crossJoin(broadcast(crossBatch))
-        .select(lit("phash_stream").as("method"), col("n_planted_groups"),
-          col("planted_pair_found"), col("planted_group_streamed"),
-          col("payloads_differ"), col("cross_batch"))
-    } finally {
-      prior match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    val groups = sigDupGroups(spark, media, "stream_phash")(t =>
+      phash64(encode(t, "UTF-8")))
+    val sigs = media
+      .select(col("doc_id"), phash64(encode(col("text"), "UTF-8")).as("sig"))
+      .localCheckpoint()
+    // flags, all derived in-plan: the planted pair hash-collides, its
+    // group surfaced through the STREAM state, the payloads are
+    // byte-distinct, and the pair genuinely spanned two batches
+    val plantedPair = sigs.filter(col("doc_id").isin(9200001L, 9200002L))
+      .agg((countDistinct("sig") === 1).as("planted_pair_found"))
+    val pairMedia = media.filter(col("doc_id").isin(9200001L, 9200002L))
+      .agg((countDistinct(md5(col("text"))) === 2).as("payloads_differ"),
+        (countDistinct(col("doc_id") % 3) === 2).as("cross_batch"))
+    // gate count is scoped to the PLANTED sig so it is scale-invariant
+    // (round 10: the sf0.1 contract sweep found 9 ORGANIC exact-aHash
+    // groups — similar real texts legitimately collide, the dedup gate
+    // CORRECTLY groups them, but a global literal count can't ride the
+    // oracle across scales; organic-pair behavior is the batch
+    // q_phash_dedup row's job)
+    val plantedGroups = groups
+      .join(sigs.filter(col("doc_id") === 9200001L).select("sig"), "sig")
+      .agg(count(lit(1)).as("n_planted_groups"))
+    plantedGroups
+      .crossJoin(broadcast(plantedPair))
+      .crossJoin(broadcast(pairMedia))
+      .select(lit("phash_stream").as("method"), col("n_planted_groups"),
+        col("planted_pair_found"),
+        (col("n_planted_groups") === 1).as("planted_group_streamed"),
+        col("payloads_differ"), col("cross_batch"))
   }
 
   /**
@@ -829,18 +805,11 @@ object StreamingPipelines {
    * against the batch twin finds zero disagreements).
    */
   def streamQualityFilter(spark: SparkSession, sfDir: String): DataFrame = {
-    val io = graft.GraftIO.root + "/stream_qc"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(io), true)
+    val io = graft.GraftIO.fresh(spark, "stream_qc")
     val w = graft.queries.CurationQueries.qcTrainShared(spark, sfDir)._2
     val docs = graft.Tables.documents(spark, sfDir).select("doc_id", "text")
     writeIdSplitBatches(spark, docs, s"$io/in", 3)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    runStream(spark)(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$io/in/b*.parquet")
+    runStream(spark)(replay(spark, DocSchema, s"$io/in/b*.parquet")
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.queries.CurationQueries.qcScore(batch, w)
@@ -882,10 +851,7 @@ object StreamingPipelines {
    * the two share one oracle.
    */
   def streamCdcApply(spark: SparkSession, sfDir: String): DataFrame = {
-    val io = graft.GraftIO.root + "/stream_cdc"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(io), true)
+    val io = graft.GraftIO.fresh(spark, "stream_cdc")
     val ord = graft.Tables.orders(spark, sfDir)
       .select(col("o_orderkey").as("key"), col("o_totalprice").as("price"))
     val k = col("key")
@@ -901,30 +867,15 @@ object StreamingPipelines {
         col("price"), lit(3L).as("seq"), lit("I").as("op")))
     writeSplitFiles(spark, changes, col("seq") - 1, s"$io/changes", 3,
       prefix = "c", idxOffset = 1)
-    val chSchema = StructType(Seq(
-      StructField("key", LongType), StructField("price", DoubleType),
-      StructField("seq", LongType), StructField("op", StringType)))
-    var cur = s"$io/v0"
-    var ver = 0
-    runStream(spark)(spark.readStream.schema(chSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$io/changes/c*.parquet")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val merged = spark.read.parquet(cur).unionByName(batch)
-          .groupBy("key")
-          .agg(max_by(struct(col("price"), col("op")), col("seq")).as("b"),
-            max("seq").as("seq"))
-          .select(col("key"), col("b.price").as("price"), col("seq"),
-            col("b.op").as("op"))
-        ver += 1
-        val next = s"$io/v$ver"
-        merged.write.parquet(next)
-        cur = next
-        ()
-      }
-      .trigger(Trigger.AvailableNow()))
-    spark.read.parquet(cur).agg(
+    foldVersions(spark, replay(spark, "key LONG, price DOUBLE, seq LONG, op STRING",
+        s"$io/changes/c*.parquet"), io) { (cur, batch) =>
+      cur.unionByName(batch)
+        .groupBy("key")
+        .agg(max_by(struct(col("price"), col("op")), col("seq")).as("b"),
+          max("seq").as("seq"))
+        .select(col("key"), col("b.price").as("price"), col("seq"),
+          col("b.op").as("op"))
+    }.agg(
       count(when(col("op") =!= "D", lit(1))).as("n_rows"),
       count(when(col("op") === "U" && col("seq") === 1, lit(1))).as("n_updated"),
       count(when(col("op") === "I", lit(1))).as("n_inserted"),
@@ -939,7 +890,7 @@ object StreamingPipelines {
    * streaming query pins its file listing at plan time, so a dimension
    * that changes mid-stream silently serves stale rows forever. The
    * foreachBatch pattern fixes it: each micro-batch re-reads the
-   * dimension from storage (a FRESH spark.read inside the callback),
+   * dimension from storage (a FRESH read inside the callback),
    * joins, and — here — also appends its own marker row, so every batch
    * observes exactly the markers of previously-processed batches. That
    * makes the gate ORDER-INDEPENDENT and sharp: over 3 batches the
@@ -951,29 +902,23 @@ object StreamingPipelines {
    */
   def streamDimRefresh(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val io = graft.GraftIO.root + "/dim_refresh"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(io), true)
+    val io = graft.GraftIO.fresh(spark, "dim_refresh")
     // 3 single-file batches: events with event_id ≡ b (mod 3)
     val ev = graft.Tables.events(spark, sfDir).select("event_id", "event_type")
     writeSplitFiles(spark, ev, pmod(col("event_id"), lit(3)), s"$io/in", 3)
     // dim seeded with a sentinel so the first fresh read has a file
     Seq(-1L).toDF("residue").write.parquet(s"$io/dim")
     val acc = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
-    val schema = StructType(Seq(StructField("event_id", LongType),
-      StructField("event_type", StringType)))
-    runStream(spark)(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$io/in/b*.parquet")
+    runStream(spark)(replay(spark, "event_id LONG, event_type STRING", s"$io/in/b*.parquet")
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val seen = spark.read.parquet(s"$io/dim")
+        val seen = batch.sparkSession.read.parquet(s"$io/dim")
           .filter(col("residue") >= 0).count()
         val res = batch.select(pmod(col("event_id"), lit(3)).as("r"))
           .head().getLong(0)
         acc.add((batch.count(), seen))
-        Seq(res).toDF("residue").write.mode("append").parquet(s"$io/dim")
+        batch.sparkSession.range(1).select(lit(res).as("residue"))
+          .write.mode("append").parquet(s"$io/dim")
         ()
       }
       .trigger(Trigger.AvailableNow()))
@@ -985,8 +930,6 @@ object StreamingPipelines {
         (sum("n_seen") === 3L).as("refresh_ok"))
   }
 
-  /** foreachBatch sink: per-micro-batch side effect publishing batch
-    * counts (DStream `foreachRDD` twin). */
   /**
    * Streaming ANN index maintenance (VERDICT r9 #5): the composition of
    * q_ivf_incremental's frozen-quantizer fold-in with the
@@ -1004,10 +947,7 @@ object StreamingPipelines {
    */
   def streamIvfIngest(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.queries.VectorQueries
-    val io = graft.GraftIO.root + "/stream_ivf"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(io), true)
+    val io = graft.GraftIO.fresh(spark, "stream_ivf")
     val emb = VectorQueries.ivfIncrEmb(spark, sfDir)
     val base = emb.filter(col("vec_id") % 10 =!= 3)
     val delta = emb.filter(col("vec_id") % 10 === 3)
@@ -1023,33 +963,18 @@ object StreamingPipelines {
     // integer decade (col / 10 alone is DOUBLE division in Spark)
     writeSplitFiles(spark, delta,
       pmod((col("vec_id") / 10).cast("long"), lit(3)), s"$io/arrivals", 3)
-    val schema = StructType(
-      StructField("vec_id", LongType) +: StructField("label", IntegerType) +:
-        (1 to 8).map(i => StructField(s"x$i", DoubleType)))
-    var cur = s"$io/v0"
-    var ver = 0
-    runStream(spark)(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$io/arrivals/b*.parquet")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    val schema = ("vec_id LONG" +: "label INT" +: (1 to 8).map(i => s"x$i DOUBLE"))
+      .mkString(", ")
+    foldVersions(spark, replay(spark, schema, s"$io/arrivals/b*.parquet"), io) {
+      (cur, batch) =>
         val assigned = VectorQueries.ivfIncrAssign(batch, cent)
           .groupBy(col("asg").as("cid")).agg(count(lit(1)).as("nd"))
-        val merged = spark.read.parquet(cur)
-          .join(assigned, Seq("cid"), "full_outer")
+        cur.join(assigned, Seq("cid"), "full_outer")
           .select(col("cid"),
             coalesce(col("n_base"), lit(0L)).as("n_base"),
             (coalesce(col("n_delta"), lit(0L)) + coalesce(col("nd"), lit(0L)))
               .as("n_delta"))
-        ver += 1
-        val next = s"$io/v$ver"
-        merged.write.parquet(next)
-        cur = next // pointer swap AFTER the full write: readers of the
-        ()         // previous version never see a torn snapshot
-      }
-      .trigger(Trigger.AvailableNow()))
-    spark.read.parquet(cur)
-      .select(col("cid"), col("n_base"), col("n_delta"),
+    }.select(col("cid"), col("n_base"), col("n_delta"),
         (col("n_base") + col("n_delta")).as("n_total"))
       .orderBy("cid")
   }
@@ -1071,10 +996,7 @@ object StreamingPipelines {
    */
   def streamEwma(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val io = graft.GraftIO.root + "/stream_ewma"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(io), true)
+    val io = graft.GraftIO.fresh(spark, "stream_ewma")
     val src = graft.Tables.events(spark, sfDir)
       .filter(col("user_id") < 20)
       .select(col("user_id"), col("event_id"),
@@ -1098,9 +1020,6 @@ object StreamingPipelines {
       ranked.select(col("user_id"), col("event_id"), col("ts_us"),
         col("value"), col("b")),
       col("b"), io, 3, prefix = "in_b")
-    val schema = StructType(Seq(
-      StructField("user_id", LongType), StructField("event_id", LongType),
-      StructField("ts_us", LongType), StructField("value", DoubleType)))
     val updateFn = (userId: Long, rows: Iterator[(Long, Long, Long, Double)],
         state: GroupState[(Double, Long)]) => {
       val (acc0, n0) = if (state.exists) state.get else (0.0, 0L)
@@ -1111,9 +1030,8 @@ object StreamingPipelines {
       state.update((acc, n))
       (userId, acc, n)
     }
-    val perBatch = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$io/in_b*.parquet")
+    val perBatch = replay(spark,
+      "user_id LONG, event_id LONG, ts_us LONG, value DOUBLE", s"$io/in_b*.parquet")
       .as[(Long, Long, Long, Double)]
       .groupByKey(_._1)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout())(updateFn)
@@ -1131,6 +1049,8 @@ object StreamingPipelines {
       .orderBy("user_id")
   }
 
+  /** foreachBatch sink: per-micro-batch side effect publishing batch
+    * counts (DStream `foreachRDD` twin). */
   def foreachBatchCounts(spark: SparkSession, sfDir: String): DataFrame = {
     val acc = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long)]()
     runStream(spark)(eventStream(spark, sfDir)
@@ -1163,22 +1083,15 @@ object StreamingPipelines {
    * ZERO extra passes and no extra stateful operator.
    */
   def streamObserve(spark: SparkSession, sfDir: String): DataFrame = {
-    val io = graft.GraftIO.root + "/stream_observe"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(io), true)
+    val io = graft.GraftIO.fresh(spark, "stream_observe")
     val ev = graft.Tables.events(spark, sfDir)
       .select("event_id", "event_type", "value")
     writeSplitFiles(spark, ev, pmod(col("event_id"), lit(3)), s"$io/in", 3)
-    val schema = StructType(Seq(StructField("event_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType)))
     val finalCounts =
       new java.util.concurrent.atomic.AtomicReference[Array[(String, Long)]](
         Array.empty)
-    val q = runStream(spark)(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$io/in/b*.parquet")
+    val q = runStream(spark)(replay(spark, "event_id LONG, event_type STRING, value DOUBLE",
+      s"$io/in/b*.parquet")
       .observe("qa", count(lit(1)).as("rows"),
         sum(col("value").cast("decimal(30,12)")).as("val_sum"))
       .groupBy("event_type").agg(count(lit(1)).as("cnt"))
