@@ -236,10 +236,15 @@ object StreamingPipelines {
     *    stream. The count is pinned into the checkpoint at the first
     *    batch; results are partition-count-independent. foreachBatch
     *    bodies read through `batch.sparkSession`, the clone;
+    *  - the local FileContext [[graft.io.NioLocalFs]]. The clone's Hadoop
+    *    conf copies its SQL settings, so the offset and commit logs and
+    *    the state stores (driver and tasks) write their checkpoint files
+    *    without a `readlink`/`chmod` process launch per file;
     *  - the pipeline's own `confs` (e.g. [[RocksDbState]]). */
   private def runStream(spark: SparkSession, confs: (String, String)*)(
       writer: DataStreamWriter[_]): StreamingQuery = {
-    val scoped = Seq("spark.sql.shuffle.partitions" -> "4", ArtifactIsolation -> "false") ++ confs
+    val scoped = Seq("spark.sql.shuffle.partitions" -> "4", ArtifactIsolation -> "false",
+      "fs.AbstractFileSystem.file.impl" -> classOf[graft.io.NioLocalFs].getName) ++ confs
     val q = StartLock.synchronized {
       // getAll holds explicit values only (get would return defaults)
       val prior = spark.conf.getAll

@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (CodegenReuseSpec). `runStream` is also the one place a setting is
   * scoped on a caller's session: no other code unsets a key, and a
   * dynamic partition overwrite is a per-write option, not a session
-  * setting (ConfScopeSpec). */
+  * setting (ConfScopeSpec). No code sets a key on the JVM-wide
+  * `hadoopConfiguration`, and the local FileContext class
+  * (`fs.AbstractFileSystem.file.impl`) is scoped in `runStream` only. */
 class SessionGuardSpec extends AnyFunSuite {
   private val helperFile = "StreamingPipelines.scala"
 
@@ -54,5 +56,13 @@ class SessionGuardSpec extends AnyFunSuite {
     assert(found.isEmpty, found.mkString("\n"))
     assert(count(text(helper), ".conf.unset(") === 1,
       s"$helperFile: a setting unset outside runStream")
+  }
+
+  test("no Hadoop setting on the shared SparkContext, no FileContext class outside runStream") {
+    val (helper, rest) = split
+    // set, setBoolean, setInt, ...: every setter of the JVM-wide conf
+    val found = hits(helper +: rest, Seq("hadoopConfiguration.set")) ++
+      hits(rest, Seq("fs.AbstractFileSystem."))
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }
