@@ -5,9 +5,8 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types._
 
-import graft.sketches.{BloomBuildAgg, BloomMightContain}
+import graft.sketches.{BloomBuildAgg, BloomMightContain, SketchKey}
 
 /**
  * Optimizer rule: pre-filter the probe side of a `LEFT SEMI JOIN` with a
@@ -44,11 +43,6 @@ case class BloomSemiPrefilterRule(spark: SparkSession) extends Rule[LogicalPlan]
   private def confLong(k: String, dflt: Long): Long =
     spark.conf.getOption(k).map(_.toLong).getOrElse(dflt)
 
-  private def supported(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | ShortType | ByteType | StringType => true
-    case _ => false
-  }
-
   /** Already rewritten? Subtree-wide structural check (the probe filter
     * may have been pushed/merged below Projects by later rules). */
   private def alreadyFiltered(left: LogicalPlan, key: Expression): Boolean =
@@ -68,7 +62,7 @@ case class BloomSemiPrefilterRule(spark: SparkSession) extends Rule[LogicalPlan]
 
     plan.transformUp {
       case j @ Join(left, right, LeftSemi, Some(EqualTo(a, b)), hint)
-          if supported(a.dataType) =>
+          if SketchKey.ProbeTypes.contains(a.dataType) =>
         // orient the equality: lk from the probe (left), rk from the build
         val oriented = (a.references.subsetOf(left.outputSet) &&
             b.references.subsetOf(right.outputSet), a, b) match {

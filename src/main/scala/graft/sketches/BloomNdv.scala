@@ -1,7 +1,5 @@
 package graft.sketches
 
-import java.io.{ByteArrayInputStream, DataInputStream}
-
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -25,10 +23,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
  * same estimate — safe to compare against thresholds in a hash-checked
  * oracle.
  *
- * Parsing: BloomFilterImpl serialized layout (format VERSION 2, verified
- * against `writeTo` byte-for-byte): `int version, int numHashFunctions,
- * long numWords, long words[numWords]`. Only the popcount and sizes are
- * needed — the words are scanned once and not retained.
+ * The bits come from [[Bloom.readBits]]; only the estimate is cached, the
+ * words are not retained.
  *
  * Capability extension of the reference's Bloom membership stage
  * (SURVEY.md §2c `[paper:SB07]`; reference mount empty).
@@ -44,28 +40,16 @@ case class BloomNdv(child: Expression) extends UnaryExpression {
         s"$prettyName argument must be a BINARY serialized Bloom filter")
     } else TypeCheckResult.TypeCheckSuccess
 
-  @transient private var cachedBytes: Array[Byte] = _
-  @transient private var cachedEst: Double = _
+  @transient private lazy val estimates = new ParseCache(b => fromBits(Bloom.readBits(b)))
 
-  def estimate(bytes: Array[Byte]): Double = {
-    if ((bytes ne cachedBytes) &&
-        (cachedBytes == null || !java.util.Arrays.equals(bytes, cachedBytes))) {
-      cachedBytes = bytes
-      val in = new DataInputStream(new ByteArrayInputStream(bytes))
-      val version = in.readInt()
-      require(version == 2, s"unsupported BloomFilter serial format $version")
-      val k = in.readInt()
-      val numWords = in.readLong()
-      var setBits = 0L
-      var i = 0L
-      while (i < numWords) { setBits += java.lang.Long.bitCount(in.readLong()); i += 1 }
-      val m = numWords * 64.0
-      cachedEst =
-        if (setBits == 0L) 0.0
-        else if (setBits >= m) Double.PositiveInfinity
-        else -(m / k) * Math.log1p(-(setBits / m))
-    }
-    cachedEst
+  def estimate(bytes: Array[Byte]): Double = estimates(bytes)
+
+  private def fromBits(bits: Bloom.Bits): Double = {
+    val m = bits.bitSize.toDouble
+    val setBits = bits.setBits
+    if (setBits == 0L) 0.0
+    else if (setBits >= m) Double.PositiveInfinity
+    else -(m / bits.k) * Math.log1p(-(setBits / m))
   }
 
   override def nullSafeEval(v: Any): Any = estimate(v.asInstanceOf[Array[Byte]])

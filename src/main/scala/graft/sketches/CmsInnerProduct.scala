@@ -1,7 +1,5 @@
 package graft.sketches
 
-import java.io.{ByteArrayInputStream, DataInputStream}
-
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -25,12 +23,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
  * probabilistic: every counter is a sum over true frequencies, so each
  * row's inner product ≥ a·b exactly.
  *
- * Parsing: Spark's `CountMinSketchImpl` serialized layout (format
- * VERSION_1, verified against `writeTo` byte-for-byte) is
- * `int version, long totalCount, int depth, int width, long hashA[depth],
- * long table[depth][width]`. `CountMinSketch` does not expose its counter
- * matrix, so the probe reads the serialized form directly; the format is
- * the class's public interchange contract (`writeTo`/`readFrom`).
+ * `CountMinSketch` does not expose its counter matrix, so the probe reads
+ * the serialized form through [[Cms.readCounters]].
  *
  * Per-row sums saturate at Long.MaxValue (counters are ~N per side, so a
  * cell product can exceed 2⁶³ near 10¹⁰ rows/side); saturation only ever
@@ -51,34 +45,15 @@ case class CmsInnerProduct(left: Expression, right: Expression)
         s"$prettyName arguments must both be BINARY serialized CMS sketches")
     } else TypeCheckResult.TypeCheckSuccess
 
-  // one-entry caches, same identity-then-content discipline as CmsEstimate:
-  // the sketches are usually query constants (broadcast one-row joins), so
-  // repeated evaluations parse each binary once.
-  @transient private var cachedL: Array[Byte] = _
-  @transient private var cachedLP: ParsedCms = _
-  @transient private var cachedR: Array[Byte] = _
-  @transient private var cachedRP: ParsedCms = _
-
-  private def parsedLeft(b: Array[Byte]): ParsedCms = {
-    if ((b ne cachedL) &&
-        (cachedL == null || !java.util.Arrays.equals(b, cachedL))) {
-      cachedL = b; cachedLP = ParsedCms.parse(b)
-    }
-    cachedLP
-  }
-  private def parsedRight(b: Array[Byte]): ParsedCms = {
-    if ((b ne cachedR) &&
-        (cachedR == null || !java.util.Arrays.equals(b, cachedR))) {
-      cachedR = b; cachedRP = ParsedCms.parse(b)
-    }
-    cachedRP
-  }
+  // the sketches are usually query constants (broadcast one-row joins),
+  // so repeated evaluations parse each binary once
+  @transient private lazy val lefts = new ParseCache(Cms.readCounters)
+  @transient private lazy val rights = new ParseCache(Cms.readCounters)
 
   def innerProduct(lb: Array[Byte], rb: Array[Byte]): Long = {
-    val a = parsedLeft(lb)
-    val b = parsedRight(rb)
-    require(a.depth == b.depth && a.width == b.width &&
-        java.util.Arrays.equals(a.hashA, b.hashA),
+    val a = lefts(lb)
+    val b = rights(rb)
+    require(a.sameFamily(b),
       s"$prettyName requires sketches built with the same eps/confidence/seed " +
         s"(got ${a.depth}x${a.width} vs ${b.depth}x${b.width} or differing hash families)")
     var best = Long.MaxValue
@@ -123,28 +98,4 @@ case class CmsInnerProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CmsInnerProduct =
     copy(left = newLeft, right = newRight)
-}
-
-/** The counter matrix of a serialized `CountMinSketch` (format VERSION_1):
-  * `table` is row-major `depth × width`. */
-private[graft] final case class ParsedCms(
-    totalCount: Long, depth: Int, width: Int,
-    hashA: Array[Long], table: Array[Long])
-
-private[graft] object ParsedCms {
-  def parse(bytes: Array[Byte]): ParsedCms = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val version = in.readInt()
-    require(version == 1, s"unsupported CountMinSketch serial format $version")
-    val totalCount = in.readLong()
-    val depth = in.readInt()
-    val width = in.readInt()
-    val hashA = new Array[Long](depth)
-    var i = 0
-    while (i < depth) { hashA(i) = in.readLong(); i += 1 }
-    val table = new Array[Long](depth * width)
-    i = 0
-    while (i < table.length) { table(i) = in.readLong(); i += 1 }
-    ParsedCms(totalCount, depth, width, hashA, table)
-  }
 }

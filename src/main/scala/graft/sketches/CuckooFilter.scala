@@ -1,15 +1,6 @@
 package graft.sketches
 
-import java.nio.ByteBuffer
-
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.expressions.XXH64
 
 /**
  * Cuckoo filter (Fan, Andersen, Kaminsky, Mitzenmacher: "Cuckoo Filter:
@@ -58,46 +49,8 @@ object CuckooTable {
   def altDelta(fp: Byte, m: Int): Int =
     (((fp & 0xff) * 0x5bd1e995) & (m - 1))
 
-  def deserialize(bytes: Array[Byte]): CuckooTable = {
-    val buf = ByteBuffer.wrap(bytes)
-    val m = buf.getInt
-    val nItems = buf.getLong
-    val nDropped = buf.getLong
-    val table = new Array[Byte](m * SlotsPerBucket)
-    buf.get(table)
-    new CuckooTable(m, table, nItems, nDropped)
-  }
-
-  // Per-thread memo of the last deserialized table, keyed by byte-array
-  // IDENTITY: the common probe shape is a foldable/broadcast sketch
-  // whose literal byte array is the SAME object for every row a task
-  // probes, so without this every row pays an O(m) ByteBuffer copy —
-  // the probe would be O(filter size) per row instead of O(1). Probes
-  // only read the cached table (delete goes through CuckooOps on a
-  // fresh deserialize), so sharing it across rows is safe; a different
-  // array instance simply misses and re-deserializes.
-  // SoftReference so a long-lived executor thread pool does not pin the
-  // last sketch (bytes + decoded table can be MBs) past the query that
-  // used it: the JVM clears soft refs under memory pressure, turning the
-  // retention into at-worst one extra deserialize after a near-OOM GC.
-  private val lastTable =
-    new ThreadLocal[java.lang.ref.SoftReference[(Array[Byte], CuckooTable)]]
-  private def tableFor(bytes: Array[Byte]): CuckooTable = {
-    val ref = lastTable.get()
-    val cached = if (ref == null) null else ref.get()
-    if (cached != null && (cached._1 eq bytes)) cached._2
-    else {
-      val t = deserialize(bytes)
-      lastTable.set(new java.lang.ref.SoftReference((bytes, t)))
-      t
-    }
-  }
-
-  /** Static probe entry points for generated code. */
-  def containsBytesLong(sketch: Array[Byte], v: Long): Boolean =
-    tableFor(sketch).contains(itemHashLong(v))
-  def containsBytesBinary(sketch: Array[Byte], v: Array[Byte]): Boolean =
-    tableFor(sketch).contains(itemHashBytes(v))
+  /** Reads a table in the [[Cuckoo]] format. */
+  def deserialize(bytes: Array[Byte]): CuckooTable = Cuckoo.read(bytes)
 }
 
 final class CuckooTable(val m: Int, val table: Array[Byte],
@@ -197,141 +150,16 @@ final class CuckooTable(val m: Int, val table: Array[Byte],
     this
   }
 
-  def serialize(): Array[Byte] = {
-    val buf = ByteBuffer.allocate(4 + 8 + 8 + table.length)
-    buf.putInt(m).putLong(nItems).putLong(nDropped).put(table)
-    buf.array()
-  }
-}
-
-/** `cuckoo_agg(col, m)` — distributed cuckoo-filter build: one table
-  * per partition, merged by fingerprint re-insertion. BinaryType out. */
-case class CuckooBuildAgg(
-    child: Expression,
-    bucketsExpr: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CuckooTable] with BinaryLike[Expression] {
-
-  def this(child: Expression, bucketsExpr: Expression) = this(child, bucketsExpr, 0, 0)
-
-  private lazy val m: Int = bucketsExpr.eval().asInstanceOf[Number].intValue()
-
-  override def left: Expression = child
-  override def right: Expression = bucketsExpr
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!bucketsExpr.foldable) {
-      TypeCheckResult.TypeCheckFailure("cuckoo_agg bucket count must be a constant")
-    } else {
-      // validate the VALUE at analysis time too: a null / non-positive /
-      // non-power-of-two m would otherwise sail through analysis and
-      // blow up later on executors (NPE in the Number cast or the
-      // CuckooTable require) — fail here with a clean message instead
-      val mv = bucketsExpr.eval()
-      val mOk = mv match {
-        case n: Number =>
-          val m = n.longValue()
-          m > 0 && m <= Int.MaxValue && (m & (m - 1)) == 0
-        case _ => false
-      }
-      if (!mOk) {
-        TypeCheckResult.TypeCheckFailure(
-          s"cuckoo_agg bucket count must be a positive power-of-two integer, got $mv")
-      } else child.dataType match {
-        case LongType | IntegerType | StringType => TypeCheckResult.TypeCheckSuccess
-        case dt => TypeCheckResult.TypeCheckFailure(
-          s"cuckoo_agg does not support input type ${dt.catalogString}")
-      }
-    }
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "cuckoo_agg"
-
-  override def createAggregationBuffer(): CuckooTable = new CuckooTable(m)
-
-  override def update(buffer: CuckooTable, input: InternalRow): CuckooTable = {
-    val v = child.eval(input)
-    if (v != null) child.dataType match {
-      case LongType    => buffer.insert(CuckooTable.itemHashLong(v.asInstanceOf[Long]))
-      case IntegerType => buffer.insert(CuckooTable.itemHashLong(v.asInstanceOf[Int].toLong))
-      case StringType  => buffer.insert(
-        CuckooTable.itemHashBytes(v.asInstanceOf[UTF8String].getBytes))
-      case dt => throw new IllegalStateException(s"unsupported type $dt")
-    }
-    buffer
-  }
-
-  override def merge(buffer: CuckooTable, other: CuckooTable): CuckooTable =
-    buffer.mergeInPlace(other)
-
-  override def eval(buffer: CuckooTable): Any = buffer.serialize()
-
-  override def serialize(buffer: CuckooTable): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): CuckooTable =
-    CuckooTable.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CuckooBuildAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CuckooBuildAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CuckooBuildAgg =
-    copy(child = newLeft, bucketsExpr = newRight)
-}
-
-/** `cuckoo_contains(sketch, v)` — codegen'd membership probe. */
-case class CuckooContains(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (left.dataType != BinaryType) {
-      TypeCheckResult.TypeCheckFailure("cuckoo_contains sketch must be BINARY")
-    } else right.dataType match {
-      case LongType | IntegerType | StringType => TypeCheckResult.TypeCheckSuccess
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"cuckoo_contains does not support probe type ${dt.catalogString}")
-    }
-  }
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
-  override def prettyName: String = "cuckoo_contains"
-
-  override def nullSafeEval(sk: Any, v: Any): Any = {
-    val bytes = sk.asInstanceOf[Array[Byte]]
-    right.dataType match {
-      case LongType    => CuckooTable.containsBytesLong(bytes, v.asInstanceOf[Long])
-      case IntegerType => CuckooTable.containsBytesLong(bytes, v.asInstanceOf[Int].toLong)
-      case StringType  => CuckooTable.containsBytesBinary(bytes,
-        v.asInstanceOf[UTF8String].getBytes)
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = CuckooTable.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val call = right.dataType match {
-      case LongType    => (s: String, v: String) => s"$cls.containsBytesLong($s, $v)"
-      case IntegerType => (s: String, v: String) => s"$cls.containsBytesLong($s, (long)$v)"
-      case StringType  => (s: String, v: String) =>
-        s"$cls.containsBytesBinary($s, $v.getBytes())"
-    }
-    nullSafeCodeGen(ctx, ev, (sk, v) => s"${ev.value} = ${call(sk, v)};")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CuckooContains =
-    copy(left = newLeft, right = newRight)
+  /** This table in the [[Cuckoo]] format. */
+  def serialize(): Array[Byte] = Cuckoo.write(this)
 }
 
 /** Driver-side helpers for the bounded-delete demo path. */
 object CuckooOps {
   /** Delete each key (one stored copy) from a serialized filter. */
   def deleteLongs(sketch: Array[Byte], keys: Seq[Long]): Array[Byte] = {
-    val t = CuckooTable.deserialize(sketch)
+    val t = Cuckoo.read(sketch)
     keys.foreach(k => t.delete(CuckooTable.itemHashLong(k)))
-    t.serialize()
+    Cuckoo.write(t)
   }
 }

@@ -1,7 +1,5 @@
 package graft.sketches
 
-import java.io.ByteArrayOutputStream
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -28,23 +26,17 @@ import org.apache.spark.util.sketch.{BloomFilter, CountMinSketch}
 trait SketchMergeAgg[S >: Null <: AnyRef]
   extends TypedImperativeAggregate[S] with UnaryLike[Expression] {
 
-  /** SQL-facing function name. */
-  protected def name: String
+  protected def codec: SketchCodec[S]
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
       case BinaryType => TypeCheckResult.TypeCheckSuccess
       case dt => TypeCheckResult.TypeCheckFailure(
-        s"$name expects a BINARY serialized sketch, got ${dt.catalogString}")
+        s"$prettyName expects a BINARY serialized sketch, got ${dt.catalogString}")
     }
 
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
-  override def prettyName: String = name
-
-  protected def read(bytes: Array[Byte]): S
-  protected def mergeSketch(a: S, b: S): S
-  protected def write(s: S, out: ByteArrayOutputStream): Unit
 
   /** Empty buffer is null: the merge of zero sketches is undefined until
     * the first input supplies the shape. */
@@ -54,28 +46,23 @@ trait SketchMergeAgg[S >: Null <: AnyRef]
     val v = child.eval(input)
     if (v == null) buffer
     else {
-      val incoming = read(v.asInstanceOf[Array[Byte]])
-      if (buffer == null) incoming else mergeSketch(buffer, incoming)
+      val incoming = codec.read(v.asInstanceOf[Array[Byte]])
+      if (buffer == null) incoming else codec.merge(buffer, incoming)
     }
   }
 
   override def merge(buffer: S, other: S): S =
     if (buffer == null) other
     else if (other == null) buffer
-    else mergeSketch(buffer, other)
+    else codec.merge(buffer, other)
 
-  override def eval(buffer: S): Any =
-    if (buffer == null) null else serialize(buffer)
+  override def eval(buffer: S): Any = serialize(buffer)
 
-  override def serialize(buffer: S): Array[Byte] = {
-    if (buffer == null) return null
-    val out = new ByteArrayOutputStream()
-    write(buffer, out)
-    out.toByteArray
-  }
+  override def serialize(buffer: S): Array[Byte] =
+    if (buffer == null) null else codec.write(buffer)
 
   override def deserialize(bytes: Array[Byte]): S =
-    if (bytes == null) null else read(bytes)
+    if (bytes == null) null else codec.read(bytes)
 }
 
 /** `cms_merge_agg(sketchCol)` — element-wise counter addition. */
@@ -85,17 +72,10 @@ case class CmsMergeAgg(
     override val inputAggBufferOffset: Int = 0)
   extends SketchMergeAgg[CountMinSketch] {
 
-  override protected def name: String = "cms_merge_agg"
-
   def this(child: Expression) = this(child, 0, 0)
 
-  override protected def read(bytes: Array[Byte]): CountMinSketch =
-    CountMinSketch.readFrom(bytes)
-  override protected def mergeSketch(a: CountMinSketch, b: CountMinSketch): CountMinSketch = {
-    a.mergeInPlace(b); a
-  }
-  override protected def write(s: CountMinSketch, out: ByteArrayOutputStream): Unit =
-    s.writeTo(out)
+  override protected def codec: SketchCodec[CountMinSketch] = Cms
+  override def prettyName: String = "cms_merge_agg"
 
   override def withNewMutableAggBufferOffset(newOffset: Int): CmsMergeAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -112,17 +92,10 @@ case class BloomMergeAgg(
     override val inputAggBufferOffset: Int = 0)
   extends SketchMergeAgg[BloomFilter] {
 
-  override protected def name: String = "bloom_merge_agg"
-
   def this(child: Expression) = this(child, 0, 0)
 
-  override protected def read(bytes: Array[Byte]): BloomFilter =
-    BloomFilter.readFrom(bytes)
-  override protected def mergeSketch(a: BloomFilter, b: BloomFilter): BloomFilter = {
-    a.mergeInPlace(b); a
-  }
-  override protected def write(s: BloomFilter, out: ByteArrayOutputStream): Unit =
-    s.writeTo(out)
+  override protected def codec: SketchCodec[BloomFilter] = Bloom
+  override def prettyName: String = "bloom_merge_agg"
 
   override def withNewMutableAggBufferOffset(newOffset: Int): BloomMergeAgg =
     copy(mutableAggBufferOffset = newOffset)

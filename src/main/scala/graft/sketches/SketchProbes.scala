@@ -2,60 +2,54 @@ package graft.sketches
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.{BloomFilter, CountMinSketch}
 
 /**
- * Shared plumbing for scalar probes over a serialized sketch column.
+ * Shared plumbing for scalar probes `f(sketch, value)` over a serialized
+ * sketch column.
  *
  * The sketch argument is usually query-constant (a scalar subquery or a
- * broadcast one-row join), so each expression instance keeps a one-entry
- * deserialization cache keyed by array identity-then-content; repeated
- * probes against the same sketch pay a single `readFrom`. When the column
- * genuinely varies per row (e.g. one sketch per group), the cache misses
- * and we deserialize per row — still correct, just slower.
+ * broadcast one-row join), so each expression instance parses it through
+ * a one-entry [[ParseCache]]: repeated probes against the same sketch pay
+ * a single parse. When the column genuinely varies per row (e.g. one
+ * sketch per group), the cache misses and we parse per row — still
+ * correct, just slower.
  *
- * Both probes generate code (no `CodegenFallback`), so a
+ * Every probe generates code (no `CodegenFallback`), so a
  * `filter(bloom_might_contain(...))` stays inside whole-stage codegen —
  * this is the hot path when a 100 TB fact scan is pre-filtered by a
  * dimension-side Bloom filter.
  */
-trait SketchProbe { self: BinaryExpression =>
-  protected def valueExpr: Expression
+trait SketchProbe[S] extends BinaryExpression {
+  protected def codec: SketchCodec[S]
+  protected def keyTypes: Seq[DataType]
 
-  override def checkInputDataTypes(): TypeCheckResult = {
+  @transient private lazy val sketches = new ParseCache(codec.read)
+
+  override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType != BinaryType) {
       TypeCheckResult.TypeCheckFailure(s"$prettyName sketch argument must be BINARY")
-    } else valueExpr.dataType match {
-      case LongType | IntegerType | ShortType | ByteType | StringType =>
-        TypeCheckResult.TypeCheckSuccess
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName does not support probe type ${dt.catalogString}")
-    }
+    } else SketchKey.check(prettyName, "probe", right.dataType, keyTypes)
+
+  def probeLong(sketch: Array[Byte], v: Long): Any =
+    codec.probe.long(sketches(sketch), v)
+  def probeBinary(sketch: Array[Byte], v: Array[Byte]): Any =
+    codec.probe.binary(sketches(sketch), v)
+
+  override def nullSafeEval(sketch: Any, value: Any): Any =
+    SketchKey(right.dataType, value, codec.probe, sketches(sketch.asInstanceOf[Array[Byte]]))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("sketchProbe", this, getClass.getName)
+    val boxed = CodeGenerator.boxedType(dataType)
+    nullSafeCodeGen(ctx, ev, (sk, v) => {
+      val call = SketchKey.gen(right.dataType, v,
+        k => s"$ref.probeLong($sk, $k)", k => s"$ref.probeBinary($sk, $k)")
+      s"${ev.value} = ($boxed) $call;"
+    })
   }
-
-  /** Java snippet turning the evaluated probe child into the right call. */
-  protected def genProbeCall(ref: String, sk: String, v: String): String =
-    valueExpr.dataType match {
-      case LongType                       => s"$ref.probeLong($sk, $v)"
-      case IntegerType | ShortType | ByteType => s"$ref.probeLong($sk, (long)$v)"
-      case StringType                     => s"$ref.probeBinary($sk, $v.getBytes())"
-      case dt => throw new IllegalStateException(s"unsupported probe type $dt")
-    }
-
-  protected def probeAny(bytes: Array[Byte], v: Any): Any = valueExpr.dataType match {
-    case LongType    => probeLong(bytes, v.asInstanceOf[Long])
-    case IntegerType => probeLong(bytes, v.asInstanceOf[Int].toLong)
-    case ShortType   => probeLong(bytes, v.asInstanceOf[Short].toLong)
-    case ByteType    => probeLong(bytes, v.asInstanceOf[Byte].toLong)
-    case StringType  => probeBinary(bytes, v.asInstanceOf[UTF8String].getBytes)
-    case dt => throw new IllegalStateException(s"unsupported probe type $dt")
-  }
-
-  def probeLong(sketchBytes: Array[Byte], v: Long): Any
-  def probeBinary(sketchBytes: Array[Byte], v: Array[Byte]): Any
 }
 
 /**
@@ -65,37 +59,12 @@ trait SketchProbe { self: BinaryExpression =>
  * expression.
  */
 case class BloomMightContain(left: Expression, right: Expression)
-  extends BinaryExpression with SketchProbe {
+  extends SketchProbe[BloomFilter] {
 
-  protected def valueExpr: Expression = right
+  override protected def codec: SketchCodec[BloomFilter] = Bloom
+  override protected def keyTypes: Seq[DataType] = SketchKey.ProbeTypes
   override def dataType: DataType = BooleanType
   override def prettyName: String = "bloom_might_contain"
-
-  @transient private var cachedBytes: Array[Byte] = _
-  @transient private var cachedFilter: BloomFilter = _
-
-  private def filterFor(bytes: Array[Byte]): BloomFilter = {
-    if ((bytes ne cachedBytes) &&
-        (cachedBytes == null || !java.util.Arrays.equals(bytes, cachedBytes))) {
-      cachedBytes = bytes
-      cachedFilter = BloomFilter.readFrom(bytes)
-    }
-    cachedFilter
-  }
-
-  override def probeLong(sketchBytes: Array[Byte], v: Long): Any =
-    filterFor(sketchBytes).mightContainLong(v)
-  override def probeBinary(sketchBytes: Array[Byte], v: Array[Byte]): Any =
-    filterFor(sketchBytes).mightContainBinary(v)
-
-  override def nullSafeEval(sketch: Any, value: Any): Any =
-    probeAny(sketch.asInstanceOf[Array[Byte]], value)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomProbe", this, classOf[BloomMightContain].getName)
-    nullSafeCodeGen(ctx, ev, (sk, v) =>
-      s"${ev.value} = (Boolean) ${genProbeCall(ref, sk, v)};")
-  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BloomMightContain =
@@ -110,43 +79,30 @@ case class BloomMightContain(left: Expression, right: Expression)
  * `count_min_sketch` (same serialized format).
  */
 case class CmsEstimate(left: Expression, right: Expression)
-  extends BinaryExpression with SketchProbe {
+  extends SketchProbe[CountMinSketch] {
 
-  protected def valueExpr: Expression = right
+  override protected def codec: SketchCodec[CountMinSketch] = Cms
+  override protected def keyTypes: Seq[DataType] = SketchKey.ProbeTypes
   override def dataType: DataType = LongType
   override def prettyName: String = "cms_estimate"
 
-  @transient private var cachedBytes: Array[Byte] = _
-  @transient private var cachedSketch: CountMinSketch = _
-
-  private def sketchFor(bytes: Array[Byte]): CountMinSketch = {
-    if ((bytes ne cachedBytes) &&
-        (cachedBytes == null || !java.util.Arrays.equals(bytes, cachedBytes))) {
-      cachedBytes = bytes
-      cachedSketch = CountMinSketch.readFrom(bytes)
-    }
-    cachedSketch
-  }
-
-  override def probeLong(sketchBytes: Array[Byte], v: Long): Any =
-    sketchFor(sketchBytes).estimateCount(v)
-  override def probeBinary(sketchBytes: Array[Byte], v: Array[Byte]): Any = {
-    // CountMinSketch.add(Object) hashes strings via their UTF-8 bytes
-    // (addBinary/addString agree), so probing by bytes matches either.
-    sketchFor(sketchBytes).estimateCount(v)
-  }
-
-  override def nullSafeEval(sketch: Any, value: Any): Any =
-    probeAny(sketch.asInstanceOf[Array[Byte]], value)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cmsProbe", this, classOf[CmsEstimate].getName)
-    nullSafeCodeGen(ctx, ev, (sk, v) =>
-      s"${ev.value} = (Long) ${genProbeCall(ref, sk, v)};")
-  }
-
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CmsEstimate =
+    copy(left = newLeft, right = newRight)
+}
+
+/** `cuckoo_contains(sketch, v)` — codegen'd membership probe. */
+case class CuckooContains(left: Expression, right: Expression)
+  extends SketchProbe[CuckooTable] {
+
+  override protected def codec: SketchCodec[CuckooTable] = Cuckoo
+  override protected def keyTypes: Seq[DataType] = SketchKey.CuckooTypes
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = true
+  override def prettyName: String = "cuckoo_contains"
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CuckooContains =
     copy(left = newLeft, right = newRight)
 }
 

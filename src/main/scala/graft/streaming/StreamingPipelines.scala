@@ -33,6 +33,8 @@ import graft.functions._
 object CmsStateSizing {
   import org.apache.spark.util.sketch.CountMinSketch
 
+  import graft.sketches.Cms
+
   val Eps = 0.05
   val Conf = 0.999
   val Seed = 42
@@ -41,12 +43,9 @@ object CmsStateSizing {
     * event types into the serialized CMS (a fresh one when `prior` is
     * empty) and return the new bytes with the click estimate. */
   def fold(prior: Option[Array[Byte]], eventTypes: Iterator[String]): (Array[Byte], Long) = {
-    val cms = prior.map(b => CountMinSketch.readFrom(b))
-      .getOrElse(CountMinSketch.create(Eps, Conf, Seed))
+    val cms = prior.map(Cms.read).getOrElse(CountMinSketch.create(Eps, Conf, Seed))
     eventTypes.foreach(cms.addString)
-    val out = new java.io.ByteArrayOutputStream()
-    cms.writeTo(out)
-    (out.toByteArray, cms.estimateCount("click"))
+    (Cms.write(cms), cms.estimateCount("click"))
   }
 }
 

@@ -156,13 +156,21 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("bloom_ndv: Swamidass-Baldi estimate tracks true cardinality across fills") {
-    for (n <- Seq(100L, 1000L, 4000L)) {
-      val est = spark.range(n).toDF("id")
-        .agg(bloom_agg($"id", 5000L, 0.03).as("bf"))
-        .select(bloom_ndv($"bf")).head().getDouble(0)
+    def check(n: Long, est: Double): Unit = {
       val relErr = math.abs(est - n) / n
       assert(relErr < 0.05, s"n=$n est=$est relErr=$relErr")
     }
+    for (n <- Seq(100L, 1000L, 4000L)) {
+      check(n, spark.range(n).toDF("id")
+        .agg(bloom_agg($"id", 5000L, 0.03).as("bf"))
+        .select(bloom_ndv($"bf")).head().getDouble(0))
+    }
+    // a filter with a nonzero hash seed, whose seed is part of the header
+    val seeded = BloomFilter.create(5000L, BloomFilter.optimalNumOfBits(5000L, 0.03), 7)
+    (0L until 2000L).foreach(i => seeded.putLong(i * 7919L))
+    val out = new java.io.ByteArrayOutputStream()
+    seeded.writeTo(out)
+    check(2000L, spark.range(1).select(bloom_ndv(lit(out.toByteArray))).head().getDouble(0))
   }
 
   test("bloom_ndv: empty filter estimates 0; saturation yields +inf, not a number") {
@@ -296,6 +304,30 @@ class SketchSpec extends AnyFunSuite {
       bloom_might_contain(lit(null).cast("binary"), lit(1L)).as("bm"))
       .head()
     assert(probes.isNullAt(0) && probes.isNullAt(1))
+  }
+
+  test("sketch bytes are pinned: builds and merges over a fixed input") {
+    def sha(b: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+    val keys = spark.range(0, 20000, 1, 4).select(($"id" * 7919 % 5003).as("k"),
+      concat(lit("u"), ($"id" % 997).cast("string")).as("s"))
+    val built = keys.agg(bloom_agg($"k", 5000L, 0.01), cms_agg($"s", 0.01, 0.99, 42)).head()
+    val merged = keys.groupBy($"k" % 5)
+      .agg(bloom_agg($"s", 1000L, 0.01).as("bf"), cms_agg($"k", 0.01, 0.99, 42).as("cms"))
+      .agg(bloom_merge_agg($"bf"), cms_merge_agg($"cms")).head()
+    // one partition: a cuckoo table's layout depends on insertion order
+    val cuckoo = spark.range(0, 3000, 1, 1)
+      .agg(cuckoo_agg($"id" * 31, 1024), cuckoo_agg(concat(lit("c"), $"id".cast("string")), 2048))
+      .head()
+    val digests = Seq(built, merged, cuckoo).flatMap(r => (0 until r.length).map(i =>
+      sha(r.getAs[Array[Byte]](i))))
+    assert(digests === Seq(
+      "8aed87a7bf062d22271b93bada55f58b93912995061ddc7e23e7514a1cc0c6a2", // bloom_agg
+      "3fcc9d4d7ef19a122b26537a7c517597ecc9a558c5f7d97972b11ef939e52b60", // cms_agg
+      "e82b4b9c1925ea90b1fd7b5f5e7e45ef06b8cfcb5b7f8285bbe99cc4b771ea2a", // bloom_merge_agg
+      "99d6e585e0adfe6c7807adc45cbbbc617e72babf5eb80cb73f6413aa3d010ec2", // cms_merge_agg
+      "7af0a88540794b18b79fc0ec136475dad36de6c336c4522b763550fbabba84f2", // cuckoo_agg, long keys
+      "2689a6e2ed441e1d58395bf0e4395f9f98ce3795734889602b72529abc6567d5")) // cuckoo_agg, strings
   }
 
   // ---------------- direct library-level invariants ----------------
