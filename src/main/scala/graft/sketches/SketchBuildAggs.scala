@@ -39,7 +39,7 @@ trait SketchBuildAgg[S] extends TypedImperativeAggregate[S] {
 
   override def update(buffer: S, input: InternalRow): S = {
     val v = child.eval(input)
-    if (v != null) SketchKey(child.dataType, v, codec.add, buffer)
+    if (v != null) codec.add(buffer, v)
     buffer
   }
 

@@ -17,23 +17,35 @@ import org.apache.spark.util.sketch.{BloomFilter, CountMinSketch}
  * The aggregates and probes hold a codec and never touch bytes
  * themselves: [[SketchBuildAgg]], [[SketchMergeAgg]], [[SketchProbe]],
  * plus the two estimators [[BloomNdv]] and [[CmsInnerProduct]], which read
- * the raw words and counters that the sketch classes do not expose.
+ * the set bits and counters that the sketch classes do not expose.
+ *
+ * The aggregates and probes call a codec through its object (`codec` is
+ * a constant per class), so each key operation is a direct call that
+ * the JIT can inline into that class's `update` or probe.
  */
 sealed trait SketchCodec[S] {
   def read(bytes: Array[Byte]): S
   def write(sketch: S): Array[Byte]
   /** Merges `other` into `into` and returns `into`. */
   def merge(into: S, other: S): S
-  /** Adds a key to a sketch under construction. */
-  def add: KeyOp[S]
-  /** Probes a key; the result is the probe's SQL value. */
-  def probe: KeyOp[S]
-}
 
-/** One operation on a sketch, for each form a key takes ([[SketchKey]]). */
-trait KeyOp[S] {
-  def long(sketch: S, v: Long): Any
-  def binary(sketch: S, v: Array[Byte]): Any
+  def addLong(sketch: S, v: Long): Unit
+  def addBinary(sketch: S, v: Array[Byte]): Unit
+  /** The probe's SQL value for a key. */
+  def probeLong(sketch: S, v: Long): Any
+  def probeBinary(sketch: S, v: Array[Byte]): Any
+
+  /** Adds the non-null value `v` of a key type as its [[SketchKey]]. */
+  final def add(sketch: S, v: Any): Unit = {
+    val b = SketchKey.bytes(v)
+    if (b != null) addBinary(sketch, b) else addLong(sketch, SketchKey.long(v))
+  }
+
+  /** Probes the non-null value `v` of a key type as its [[SketchKey]]. */
+  final def probe(sketch: S, v: Any): Any = {
+    val b = SketchKey.bytes(v)
+    if (b != null) probeBinary(sketch, b) else probeLong(sketch, SketchKey.long(v))
+  }
 }
 
 /** Spark's `BloomFilter`: the bytes are its `writeTo` form. */
@@ -50,26 +62,13 @@ object Bloom extends SketchCodec[BloomFilter] {
     into.mergeInPlace(other); into
   }
 
-  val add: KeyOp[BloomFilter] = new KeyOp[BloomFilter] {
-    def long(bf: BloomFilter, v: Long): Any = bf.putLong(v)
-    def binary(bf: BloomFilter, v: Array[Byte]): Any = bf.putBinary(v)
-  }
+  def addLong(bf: BloomFilter, v: Long): Unit = bf.putLong(v)
+  def addBinary(bf: BloomFilter, v: Array[Byte]): Unit = bf.putBinary(v)
+  def probeLong(bf: BloomFilter, v: Long): Any = bf.mightContainLong(v)
+  def probeBinary(bf: BloomFilter, v: Array[Byte]): Any = bf.mightContainBinary(v)
 
-  val probe: KeyOp[BloomFilter] = new KeyOp[BloomFilter] {
-    def long(bf: BloomFilter, v: Long): Any = bf.mightContainLong(v)
-    def binary(bf: BloomFilter, v: Array[Byte]): Any = bf.mightContainBinary(v)
-  }
-
-  /** The hash count, seed and bit words of a filter. */
-  final case class Bits(k: Int, seed: Int, words: Array[Long]) {
-    def bitSize: Long = words.length * 64L
-    def setBits: Long = {
-      var n = 0L
-      var i = 0
-      while (i < words.length) { n += java.lang.Long.bitCount(words(i)); i += 1 }
-      n
-    }
-  }
+  /** The hash count, seed, bit count and set-bit count of a filter. */
+  final case class Bits(k: Int, seed: Int, bitSize: Long, setBits: Long)
 
   /** Reads format V2 (`BloomFilterImplV2.writeTo`, the format `create`
     * makes): `int version, int k, int seed, int numWords,
@@ -83,9 +82,11 @@ object Bloom extends SketchCodec[BloomFilter] {
     val numWords = in.getInt
     require(numWords >= 0 && numWords * 8L <= in.remaining,
       s"truncated BloomFilter: $numWords words in ${in.remaining} bytes")
-    val words = new Array[Long](numWords)
-    in.asLongBuffer().get(words)
-    Bits(k, seed, words)
+    val words = in.asLongBuffer()
+    var setBits = 0L
+    var i = 0
+    while (i < numWords) { setBits += java.lang.Long.bitCount(words.get()); i += 1 }
+    Bits(k, seed, numWords * 64L, setBits)
   }
 }
 
@@ -99,17 +100,12 @@ object Cms extends SketchCodec[CountMinSketch] {
     into.mergeInPlace(other); into
   }
 
-  val add: KeyOp[CountMinSketch] = new KeyOp[CountMinSketch] {
-    def long(cms: CountMinSketch, v: Long): Any = cms.addLong(v)
-    def binary(cms: CountMinSketch, v: Array[Byte]): Any = cms.addBinary(v)
-  }
-
+  def addLong(cms: CountMinSketch, v: Long): Unit = cms.addLong(v)
+  def addBinary(cms: CountMinSketch, v: Array[Byte]): Unit = cms.addBinary(v)
   // estimateCount(Object) hashes a byte array as addBinary does and a
   // boxed long as addLong does
-  val probe: KeyOp[CountMinSketch] = new KeyOp[CountMinSketch] {
-    def long(cms: CountMinSketch, v: Long): Any = cms.estimateCount(v)
-    def binary(cms: CountMinSketch, v: Array[Byte]): Any = cms.estimateCount(v)
-  }
+  def probeLong(cms: CountMinSketch, v: Long): Any = cms.estimateCount(v)
+  def probeBinary(cms: CountMinSketch, v: Array[Byte]): Any = cms.estimateCount(v)
 
   /** The counter matrix; `table` is row-major `depth × width`. */
   final case class Counters(
@@ -147,31 +143,31 @@ object Cms extends SketchCodec[CountMinSketch] {
 /** The engine's [[CuckooTable]]: `int m, long nItems, long nDropped,
   * byte table[m × SlotsPerBucket]`. */
 object Cuckoo extends SketchCodec[CuckooTable] {
+  private val HeaderBytes = 4 + 8 + 8
+
   def read(bytes: Array[Byte]): CuckooTable = {
+    require(bytes.length >= HeaderBytes, s"truncated cuckoo filter: ${bytes.length} bytes")
     val in = ByteBuffer.wrap(bytes)
     val m = in.getInt
     val nItems = in.getLong
     val nDropped = in.getLong
+    require(m > 0 && m.toLong * CuckooTable.SlotsPerBucket <= in.remaining,
+      s"truncated cuckoo filter: $m buckets in ${in.remaining} bytes")
     val table = new Array[Byte](m * CuckooTable.SlotsPerBucket)
     in.get(table)
     new CuckooTable(m, table, nItems, nDropped)
   }
 
   def write(t: CuckooTable): Array[Byte] =
-    ByteBuffer.allocate(4 + 8 + 8 + t.table.length)
+    ByteBuffer.allocate(HeaderBytes + t.table.length)
       .putInt(t.m).putLong(t.nItems).putLong(t.nDropped).put(t.table).array()
 
   def merge(into: CuckooTable, other: CuckooTable): CuckooTable = into.mergeInPlace(other)
 
-  val add: KeyOp[CuckooTable] = new KeyOp[CuckooTable] {
-    def long(t: CuckooTable, v: Long): Any = t.insert(CuckooTable.itemHashLong(v))
-    def binary(t: CuckooTable, v: Array[Byte]): Any = t.insert(CuckooTable.itemHashBytes(v))
-  }
-
-  val probe: KeyOp[CuckooTable] = new KeyOp[CuckooTable] {
-    def long(t: CuckooTable, v: Long): Any = t.contains(CuckooTable.itemHashLong(v))
-    def binary(t: CuckooTable, v: Array[Byte]): Any = t.contains(CuckooTable.itemHashBytes(v))
-  }
+  def addLong(t: CuckooTable, v: Long): Unit = t.insert(CuckooTable.itemHashLong(v))
+  def addBinary(t: CuckooTable, v: Array[Byte]): Unit = t.insert(CuckooTable.itemHashBytes(v))
+  def probeLong(t: CuckooTable, v: Long): Any = t.contains(CuckooTable.itemHashLong(v))
+  def probeBinary(t: CuckooTable, v: Array[Byte]): Any = t.contains(CuckooTable.itemHashBytes(v))
 }
 
 /**
@@ -194,18 +190,24 @@ object SketchKey {
     else TypeCheckResult.TypeCheckFailure(
       s"$fn does not support $role type ${dt.catalogString}")
 
-  /** Applies `op` to `sketch` with the non-null value `v` of type `dt` as the key. */
-  def apply[S](dt: DataType, v: Any, op: KeyOp[S], sketch: S): Any = dt match {
-    case LongType    => op.long(sketch, v.asInstanceOf[Long])
-    case IntegerType => op.long(sketch, v.asInstanceOf[Int].toLong)
-    case ShortType   => op.long(sketch, v.asInstanceOf[Short].toLong)
-    case ByteType    => op.long(sketch, v.asInstanceOf[Byte].toLong)
-    case StringType  => op.binary(sketch, v.asInstanceOf[UTF8String].getBytes)
-    case BinaryType  => op.binary(sketch, v.asInstanceOf[Array[Byte]])
-    case _ => throw new IllegalStateException(s"unsupported key type $dt")
+  /** The bytes a non-null STRING or BINARY key hashes as; null for the
+    * other key types, which hash as [[long]]. */
+  def bytes(v: Any): Array[Byte] = v match {
+    case s: UTF8String  => s.getBytes
+    case b: Array[Byte] => b
+    case _              => null
   }
 
-  /** The codegen form of [[apply]]: Java that passes the value `v` as a
+  /** The long a non-null LONG, INT, SHORT or TINYINT key hashes as. */
+  def long(v: Any): Long = v match {
+    case l: java.lang.Long    => l
+    case i: java.lang.Integer => i.longValue
+    case s: java.lang.Short   => s.longValue
+    case b: java.lang.Byte    => b.longValue
+    case _ => throw new IllegalStateException(s"unsupported key value ${v.getClass}")
+  }
+
+  /** The codegen form of [[bytes]] and [[long]]: Java that passes the value `v` as a
     * key to the call `long` or `binary` builds. */
   def gen(dt: DataType, v: String, long: String => String, binary: String => String): String =
     dt match {

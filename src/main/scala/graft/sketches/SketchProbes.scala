@@ -34,12 +34,12 @@ trait SketchProbe[S] extends BinaryExpression {
     } else SketchKey.check(prettyName, "probe", right.dataType, keyTypes)
 
   def probeLong(sketch: Array[Byte], v: Long): Any =
-    codec.probe.long(sketches(sketch), v)
+    codec.probeLong(sketches(sketch), v)
   def probeBinary(sketch: Array[Byte], v: Array[Byte]): Any =
-    codec.probe.binary(sketches(sketch), v)
+    codec.probeBinary(sketches(sketch), v)
 
   override def nullSafeEval(sketch: Any, value: Any): Any =
-    SketchKey(right.dataType, value, codec.probe, sketches(sketch.asInstanceOf[Array[Byte]]))
+    codec.probe(sketches(sketch.asInstanceOf[Array[Byte]]), value)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("sketchProbe", this, getClass.getName)

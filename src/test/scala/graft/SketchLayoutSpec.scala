@@ -82,4 +82,16 @@ class SketchLayoutSpec extends AnyFunSuite {
     assert((back.m, back.nItems, back.nDropped) === ((m, t.nItems, t.nDropped)))
     assert(back.table.toSeq === t.table.toSeq)
   }
+
+  test("cuckoo: truncated or corrupt bytes fail with a clean error before allocating") {
+    val bytes = new CuckooTable(64).serialize()
+    for (bad <- Seq(
+        bytes.take(10),                                    // header cut short
+        bytes.take(bytes.length - 1),                      // table cut short
+        ByteBuffer.wrap(bytes.clone()).putInt(0, Int.MaxValue).array(),  // huge m
+        ByteBuffer.wrap(bytes.clone()).putInt(0, -64).array())) {        // negative m
+      val e = intercept[IllegalArgumentException](Cuckoo.read(bad))
+      assert(e.getMessage.contains("truncated cuckoo filter"))
+    }
+  }
 }
